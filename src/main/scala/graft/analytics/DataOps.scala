@@ -2062,56 +2062,11 @@ object DataOps {
     * one row per event_id first (lexicographically-greatest tuple —
     * order-independent, NULL-free by filter) so MERGE semantics are
     * well-defined regardless of fixture replay. */
-  def incrMergePartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull && col("ts").isNotNull &&
-        col("user_id").isNotNull && col("event_type").isNotNull && col("value").isNotNull)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_date(col("ts")).as("event_date"), col("value"))
-      .groupBy(col("event_id"))
-      .agg(max(struct(col("event_date"), col("user_id"), col("event_type"), col("value"))).as("s"))
-      .select(col("event_id"), col("s.event_date").as("event_date"),
-        col("s.user_id").as("user_id"), col("s.event_type").as("event_type"),
-        col("s.value").as("value"))
-      // the deduped base feeds all three batches (and the moved slice):
-      // persist ONCE inside the timed entry so the full-events dedupe
-      // shuffle runs once per gate, not once per batch consultation
-      // (guide §1.2 step 1 — don't recompute what you already have)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val work = graft.sources.LocalFs.scratchDir("graft_pmerge")
-    // try/finally (not success-path-only cleanup): a failed merge
-    // batch must not leave the cached base + scratch dir resident for
-    // the rest of the JVM, skewing every later entry's memory headroom
-    try {
-      val target = s"$work/fact"
-      val cols = Seq("event_id", "user_id", "event_type", "event_date", "value").map(col)
-      val b0 = base.filter(col("event_id") % 3 === 0).select(cols: _*)
-      val b1 = base.filter(col("event_id") % 3 === 1).select(cols: _*)
-      // batch 2 = its own keys + the moved/updated correction slice of b0
-      val moved = b0.filter(col("event_id") % 7 === 0)
-        .withColumn("event_date", date_add(col("event_date"), 365))
-        .withColumn("value", col("value") + lit(1.0))
-      val b2 = base.filter(col("event_id") % 3 === 2).select(cols: _*)
-        .unionByName(moved.select(cols: _*))
-      Seq(b0, b1, b2).foreach(b =>
-        graft.operators.Upsert.mergePartitionedPath(spark, target, b,
-          keys = Seq("event_id"), partCol = "event_date"))
-      val rollup = spark.read.parquet(target)
-        .groupBy(col("event_date"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          Cols.r(Cols.sumExact(col("value")), 2).as("total_value"))
-        .select(date_format(col("event_date"), "yyyy-MM-dd").as("event_date"),
-          col("n_events"), col("n_users"), col("total_value"))
-        .orderBy(col("event_date").asc)
-      val settled = rollup.collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(settled, 1), rollup.schema)
-    } finally {
-      base.unpersist(blocking = false)
-      graft.sources.LocalFs.deleteRecursively(work)
-    }
-  }
+  def incrMergePartitioned(spark: SparkSession, dir: String): DataFrame =
+    mergeGate(spark, dir, "graft_pmerge", hashedKey = false,
+      graft.operators.Upsert.mergePartitionedPath(spark, _, _,
+        keys = Seq("event_id"), partCol = "event_date"),
+      spark.read.parquet(_))
 
   /** HASH-KEYED partition-scoped MERGE gate — the same three-batch
     * fixture as [[incrMergePartitioned]] but merging on a sha256
@@ -2126,51 +2081,11 @@ object DataOps {
     * merged end state keyed on the SAME sha256 expression, so a probe
     * that silently missed a matched hashed key (stale duplicate, lost
     * move) flips the rollup hash. */
-  def incrMergeHashKeys(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull && col("ts").isNotNull &&
-        col("user_id").isNotNull && col("event_type").isNotNull && col("value").isNotNull)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        to_date(col("ts")).as("event_date"), col("value"))
-      .groupBy(col("event_id"))
-      .agg(max(struct(col("event_date"), col("user_id"), col("event_type"), col("value"))).as("s"))
-      .select(sha2(col("event_id").cast("string"), 256).as("ekey"),
-        col("event_id"), col("s.event_date").as("event_date"),
-        col("s.user_id").as("user_id"), col("s.event_type").as("event_type"),
-        col("s.value").as("value"))
-      // persist rationale: see incrMergePartitioned
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val work = graft.sources.LocalFs.scratchDir("graft_pmerge_hash")
-    // try/finally rationale: see incrMergePartitioned
-    try {
-      val target = s"$work/fact"
-      val cols = Seq("ekey", "event_id", "user_id", "event_type", "event_date", "value").map(col)
-      val b0 = base.filter(col("event_id") % 3 === 0).select(cols: _*)
-      val b1 = base.filter(col("event_id") % 3 === 1).select(cols: _*)
-      val moved = b0.filter(col("event_id") % 7 === 0)
-        .withColumn("event_date", date_add(col("event_date"), 365))
-        .withColumn("value", col("value") + lit(1.0))
-      val b2 = base.filter(col("event_id") % 3 === 2).select(cols: _*)
-        .unionByName(moved.select(cols: _*))
-      Seq(b0, b1, b2).foreach(b =>
-        graft.operators.Upsert.mergePartitionedPath(spark, target, b,
-          keys = Seq("ekey"), partCol = "event_date"))
-      val rollup = spark.read.parquet(target)
-        .groupBy(col("event_date"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          Cols.r(Cols.sumExact(col("value")), 2).as("total_value"))
-        .select(date_format(col("event_date"), "yyyy-MM-dd").as("event_date"),
-          col("n_events"), col("n_users"), col("total_value"))
-        .orderBy(col("event_date").asc)
-      val settled = rollup.collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(settled, 1), rollup.schema)
-    } finally {
-      base.unpersist(blocking = false)
-      graft.sources.LocalFs.deleteRecursively(work)
-    }
-  }
+  def incrMergeHashKeys(spark: SparkSession, dir: String): DataFrame =
+    mergeGate(spark, dir, "graft_pmerge_hash", hashedKey = true,
+      graft.operators.Upsert.mergePartitionedPath(spark, _, _,
+        keys = Seq("ekey"), partCol = "event_date"),
+      spark.read.parquet(_))
 
   /** MANIFEST-COMMITTED partition-scoped MERGE gate — the flat-object-
     * store twin of [[incrMergePartitioned]]: the SAME three-batch
@@ -2184,7 +2099,22 @@ object DataOps {
     * relational replay: a stale duplicate left by a mis-scoped
     * generation install, a row lost to a torn commit, or a
     * mis-resolved manifest flips count/sum here. */
-  def incrMergeManifest(spark: SparkSession, dir: String): DataFrame = {
+  def incrMergeManifest(spark: SparkSession, dir: String): DataFrame =
+    mergeGate(spark, dir, "graft_mmerge", hashedKey = false,
+      graft.operators.Upsert.mergePartitionedManifest(spark, _, _,
+        keys = Seq("event_id"), partCol = "event_date"),
+      graft.operators.Upsert.readManifest(spark, _))
+
+  /** Fixture driver of the three partition-scoped MERGE gates
+    * ([[incrMergePartitioned]], [[incrMergeHashKeys]],
+    * [[incrMergeManifest]]): dedupe events to one row per event_id
+    * (plus the sha256 `ekey` when `hashedKey`), `merge(target, batch)`
+    * the three batches — the third carrying the moved/updated slice of
+    * batch 0 — into a scratch target, then roll up `read(target)` per
+    * date and return the settled rows. */
+  private def mergeGate(spark: SparkSession, dir: String, scratch: String, hashedKey: Boolean,
+      merge: (String, DataFrame) => Long, read: String => DataFrame): DataFrame = {
+    val keyCol = if (hashedKey) Seq(sha2(col("event_id").cast("string"), 256).as("ekey")) else Nil
     val base = Tables.events(spark, dir)
       .filter(col("event_id").isNotNull && col("ts").isNotNull &&
         col("user_id").isNotNull && col("event_type").isNotNull && col("value").isNotNull)
@@ -2192,27 +2122,32 @@ object DataOps {
         to_date(col("ts")).as("event_date"), col("value"))
       .groupBy(col("event_id"))
       .agg(max(struct(col("event_date"), col("user_id"), col("event_type"), col("value"))).as("s"))
-      .select(col("event_id"), col("s.event_date").as("event_date"),
+      .select(keyCol ++ Seq(col("event_id"), col("s.event_date").as("event_date"),
         col("s.user_id").as("user_id"), col("s.event_type").as("event_type"),
-        col("s.value").as("value"))
-      // persist rationale: see incrMergePartitioned
+        col("s.value").as("value")): _*)
+      // the deduped base feeds all three batches (and the moved slice):
+      // persist ONCE inside the timed entry so the full-events dedupe
+      // shuffle runs once per gate, not once per batch consultation
+      // (guide §1.2 step 1 — don't recompute what you already have)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val work = graft.sources.LocalFs.scratchDir("graft_mmerge")
-    // try/finally rationale: see incrMergePartitioned
+    val work = graft.sources.LocalFs.scratchDir(scratch)
+    // try/finally (not success-path-only cleanup): a failed merge
+    // batch must not leave the cached base + scratch dir resident for
+    // the rest of the JVM, skewing every later entry's memory headroom
     try {
       val target = s"$work/fact"
-      val cols = Seq("event_id", "user_id", "event_type", "event_date", "value").map(col)
+      val cols = ((if (hashedKey) Seq("ekey") else Nil) ++
+        Seq("event_id", "user_id", "event_type", "event_date", "value")).map(col)
       val b0 = base.filter(col("event_id") % 3 === 0).select(cols: _*)
       val b1 = base.filter(col("event_id") % 3 === 1).select(cols: _*)
+      // batch 2 = its own keys + the moved/updated correction slice of b0
       val moved = b0.filter(col("event_id") % 7 === 0)
         .withColumn("event_date", date_add(col("event_date"), 365))
         .withColumn("value", col("value") + lit(1.0))
       val b2 = base.filter(col("event_id") % 3 === 2).select(cols: _*)
         .unionByName(moved.select(cols: _*))
-      Seq(b0, b1, b2).foreach(b =>
-        graft.operators.Upsert.mergePartitionedManifest(spark, target, b,
-          keys = Seq("event_id"), partCol = "event_date"))
-      val rollup = graft.operators.Upsert.readManifest(spark, target)
+      Seq(b0, b1, b2).foreach(merge(target, _))
+      val rollup = read(target)
         .groupBy(col("event_date"))
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("user_id")).as("n_users"),

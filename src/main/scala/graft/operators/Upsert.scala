@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.SwapFs
+import graft.sources.{ManifestStore, SwapFs}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -108,9 +108,9 @@ object Upsert {
       val tgt = io.path(targetPath)
       val tmp = io.path(targetPath + ".tmp-merge")
       val old = io.path(targetPath + ".old-merge")
-      // crash recovery: a missing target with a surviving .old means a
-      // prior run died mid-swap — restore before merging
-      if (!io.exists(tgt) && io.exists(old)) io.rename(old, tgt)
+      // crash recovery: a surviving .old means a prior run died
+      // mid-swap — restore (or drop) it before merging
+      io.recoverSwap(tgt, old)
       val merged =
         if (io.exists(tgt)) upsertBatch(spark.read.parquet(targetPath), source, keys)
         else source
@@ -122,10 +122,7 @@ object Upsert {
       merged.observe(obs, count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(tmp.toString)
       val n = obs.get("n").asInstanceOf[Long]
-      io.delete(old)
-      if (io.exists(tgt)) io.rename(tgt, old)
-      io.rename(tmp, tgt)
-      io.delete(old)
+      io.swapIn(tmp, tgt, old)
       n
     }
   }
@@ -133,7 +130,11 @@ object Upsert {
   /** PARTITION-SCOPED MERGE into a hive-partitioned parquet layout —
     * the incremental form [[mergeIntoPath]] cannot give (it rewrites
     * the WHOLE target every batch, documented): only partitions that
-    * can change are rewritten. Affected set = partitions holding
+    * can change are rewritten. This is the one partition-scoped MERGE
+    * protocol ([[mergeScoped]]) with the IN-PLACE commit: merged
+    * partitions swap into the target by directory rename
+    * ([[mergePartitionedManifest]] is the same protocol with a
+    * manifest commit). Affected set = partitions holding
     * source rows ∪ target partitions holding MATCHED keys (found with
     * one column-pruned semi probe — the scan reads the key columns
     * only; partition values come from directory names). Untouched
@@ -195,233 +196,26 @@ object Upsert {
     * whose live directory is missing (and drops leftovers whose
     * install completed), so crashed-partition rows rejoin the probe
     * (the `_PENDING` marker guarantees no index pruning can run until
-    * the index is rebuilt; UpsertSpec pins both windows). Fenced by a
-    * single-writer lease. Creates the target (full partitioned write)
-    * on first use. Partition values compare in CAST-to-string space,
+    * the index is rebuilt; UpsertSpec pins both windows, and
+    * CrashMatrixSpec crashes the protocol at every filesystem
+    * mutation). Fenced by a single-writer lease. Creates the target
+    * (full partitioned write) on first use. Partition values compare in CAST-to-string space,
     * matching Spark's own partition-path rendering for
     * string/date/integral columns. Returns the merged row count over
     * the AFFECTED partitions. */
   def mergePartitionedPath(spark: SparkSession, targetPath: String,
       source: DataFrame, keys: Seq[String], partCol: String,
       maxPartitions: Int = 4096,
-      leaseStaleMs: Long = SwapFs.DefaultLeaseStaleMs): Long = {
-    require(!keys.contains(partCol),
-      s"mergePartitionedPath: partition column $partCol cannot also be a merge key")
-    val io = SwapFs.forPath(spark, targetPath)
-    io.withLease(targetPath, leaseStaleMs) {
-      mergePartitionedLocked(spark, io, targetPath, source, keys, partCol, maxPartitions)
-    }
-  }
+      leaseStaleMs: Long = SwapFs.DefaultLeaseStaleMs): Long =
+    mergeScoped(spark, targetPath, source, keys, partCol, maxPartitions, leaseStaleMs)(
+      new InPlace(_, _, _, _))
 
-  /** ONE bounded job fetching the batch's distinct partition values
-    * AND its per-partition key bounds (the r14 form paid two driver
-    * jobs: a distinct-p collect plus a separate global min/max
-    * aggregate). Bounded driver fetch: a batch accidentally keyed on
-    * a high-cardinality partition column must not materialize every
-    * distinct value before the caller's loud budget failure fires —
-    * the truncated set alone already exceeds maxPartitions. Global
-    * bounds fold from the per-partition rows through a LOCAL relation
-    * (min-of-mins / max-of-maxes — associative, so the fold is
-    * exact), keeping every type comparison inside Spark expressions.
-    * Shared by both partitioned merge paths so the fold's
-    * associativity subtlety and the limit/require truncation contract
-    * live in one place. */
-  private def srcPartsAndBounds(spark: SparkSession, srcPK: DataFrame,
-      keys: Seq[String], maxPartitions: Int)
-      : (Array[String], Boolean, Set[String], DataFrame) = {
-    val pbAggs = keys.flatMap(k =>
-      Seq(min(col(k)).as(s"bmin_$k"), max(col(k)).as(s"bmax_$k")))
-    val srcPartDf = srcPK.groupBy(col("__graft_p")).agg(pbAggs.head, pbAggs.tail: _*)
-      .limit(maxPartitions + 1)
-    val srcPartRows = timed("srcparts")(srcPartDf.collect())
-    val srcHasNull = srcPartRows.exists(_.isNullAt(0))
-    val srcPartVals = srcPartRows.filterNot(_.isNullAt(0)).map(_.getString(0))
-    val srcPartCanon = srcPartVals.toSet ++
-      (if (srcHasNull) Set(KeyIdx.NullPart) else Set.empty)
-    val boundsLocal = spark.createDataFrame(
-        java.util.Arrays.asList(srcPartRows: _*), srcPartDf.schema)
-      .agg(keys.map(k => min(col(s"bmin_$k")).as(s"bmin_$k")).head,
-        (keys.map(k => min(col(s"bmin_$k")).as(s"bmin_$k")).tail ++
-          keys.map(k => max(col(s"bmax_$k")).as(s"bmax_$k"))): _*)
-    (srcPartVals, srcHasNull, srcPartCanon, boundsLocal)
-  }
-
-  private def mergePartitionedLocked(spark: SparkSession, io: SwapFs, targetPath: String,
-      source: DataFrame, keys: Seq[String], partCol: String, maxPartitions: Int): Long = {
-    require(graft.sources.ManifestStore.generations(io, targetPath).isEmpty,
-      s"mergePartitionedPath: $targetPath is manifest-committed — use mergePartitionedManifest " +
-        "(mixing in-place swaps into a manifest target would mutate referenced directories)")
-    val tgt = io.path(targetPath)
-    val old = io.path(targetPath + ".old-merge")
-    if (!io.exists(tgt) && io.exists(old)) io.rename(old, tgt)
-    if (!io.exists(tgt)) {
-      val obs0 = Observation()
-      clusterByPart(source.observe(obs0, count(lit(1)).as("n")), partCol)
-        .write.mode("overwrite").partitionBy(partCol).parquet(targetPath)
-      // index from the WRITTEN layout, not a second execution of the
-      // caller's source plan (which may be an arbitrarily expensive
-      // upstream job): a column-pruned read-back of the fresh parquet
-      // yields the same per-partition stats for one metadata-cheap
-      // scan — the merge path's own tmp-read pattern
-      val wroteSchema = StructType(source.schema.map(f =>
-        if (f.name == partCol) f.copy(dataType = StringType) else f))
-      KeyIdx.rebuild(spark, io, targetPath,
-        spark.read.schema(wroteSchema).parquet(targetPath), partCol, keys)
-      return obs0.get("n").asInstanceOf[Long]
-    }
-    val prefix = s"$partCol="
-    // crash recovery BEFORE anything reads the target: a leftover
-    // `d=X.old-pmerge` means a prior run died inside the swap window.
-    // If d=X is absent the install never happened — rename the old
-    // copy back (the pre-merge rows must rejoin the probe, or the
-    // swap loop's leading delete would destroy the only copy: silent
-    // data loss). If d=X exists the install completed — drop the
-    // leftover. The prior run's `_PENDING` marker is still in place
-    // (it is only removed after a completed post-swap index rewrite),
-    // so no stale index row can prune the restored rows out of the
-    // probe below.
-    for (name <- io.listDirNames(tgt) if name.endsWith(".old-pmerge")) {
-      val live = new HPath(tgt, name.stripSuffix(".old-pmerge"))
-      val leftover = new HPath(tgt, name)
-      if (io.exists(live)) io.delete(leftover)
-      else io.rename(leftover, live)
-    }
-    val target = spark.read.parquet(targetPath)
-    // The source batch is consulted by FOUR independent jobs per merge
-    // (thin-frame build, anti-join probe side, union side of the
-    // merged write — and the caller's plan behind it is often a full
-    // dedupe over an upstream fact). Persist the BATCH (O(batch) rows
-    // — the small side of an incremental merge by definition;
-    // MEMORY_AND_DISK spills, never OOMs) so that plan executes once
-    // per merge, not once per consultation.
-    val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Thin (partition, keys) projection of the persisted batch. NO
-    // distinct / persist of its own (the r14 form paid a full shuffle
-    // to dedupe it): every consumer — the bounds rollup, the hash
-    // fetch (distinct inside), the semi join — is duplicate-
-    // insensitive, so the projection just narrows the cached batch.
-    val srcPK = src.select(col(partCol).cast("string").as("__graft_p") +: keys.map(col): _*)
-    var mergedCached: Option[DataFrame] = None
-    try {
-    val srcKeys = srcPK.select(keys.map(col): _*)
-    // the batch-side bounds fetch and the index meta read are
-    // independent (source cache vs index parquet) — overlap them
-    // (guide §2.6); the srcparts phase print then runs concurrently
-    // with readValid's, so their wall-clocks are not additive
-    val srcPartsF = concurrent.Future(
-      srcPartsAndBounds(spark, srcPK, keys, maxPartitions))(
-      concurrent.ExecutionContext.global)
-    // candidate-partition prefilter from the key index: the probe
-    // below only READS partitions whose recorded key ranges AND Bloom
-    // sidecars admit the batch — O(touched) I/O instead of O(target)
-    val validIdx = timed("readValid")(KeyIdx.readValid(spark, io, targetPath, target.schema,
-      io.listDirNames(tgt), prefix, partCol, keys))
-    val (srcPartVals, srcHasNull, srcPartCanon, boundsLocal) =
-      concurrent.Await.result(srcPartsF, concurrent.duration.Duration.Inf)
-    val probed = validIdx match {
-      case Some(idx) =>
-        val cand = timed("candidates")(KeyIdx.candidates(spark, io, targetPath, idx,
-          srcKeys, boundsLocal, srcPartCanon, target.schema, keys))
-        val hasDefault = cand.contains(KeyIdx.NullPart)
-        val vals = cand.filterNot(_ == KeyIdx.NullPart)
-        val inCand = col(partCol).cast("string").isin(vals.toIndexedSeq: _*)
-        target.filter(if (hasDefault) inCand || col(partCol).isNull else inCand)
-      case None => target
-    }
-    val hitRows = timed("affected")(probed.join(srcKeys, keys, "left_semi")
-      .select(col(partCol).cast("string").as("p")).distinct()
-      .limit(maxPartitions + 1).collect())
-    val hasNull = srcHasNull || hitRows.exists(_.isNullAt(0))
-    val parts = (srcPartVals ++ hitRows.filterNot(_.isNullAt(0)).map(_.getString(0))).distinct
-    require(parts.length + (if (hasNull) 1 else 0) <= maxPartitions,
-      s"mergePartitionedPath: batch touches more than $maxPartitions partitions " +
-        s"of $targetPath — use mergeIntoPath (full rewrite) for rewrite-everything batches")
-    val inParts = col(partCol).cast("string").isin(parts.toIndexedSeq: _*)
-    val scoped = target.filter(if (hasNull) inParts || col(partCol).isNull else inParts)
-    // When a valid index will be staged below, persist the merged
-    // frame: the stage's two jobs (meta stats + record rows) then
-    // scan the cache the write job populates instead of re-reading
-    // the just-written tmp parquet (guide §1.2 step 1) — measured
-    // best-of-3 at sf0.1: ~1 s/gate faster than the tmp re-read form
-    // even with the stage jobs already overlapped. MEMORY_AND_DISK,
-    // unpersisted in the finally. At true incremental scale merged is
-    // O(touched partitions) ≈ O(batch); this gate fixture's batches
-    // touch every partition, the worst case, and still win.
-    val merged0 = upsertBatch(scoped, src, keys)
-    val merged = if (validIdx.isEmpty) merged0 else {
-      val m = merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      mergedCached = Some(m); m
-    }
-    val tmp = io.path(targetPath + ".tmp-pmerge")
-    io.delete(tmp)
-    val obs = Observation()
-    timed("write")(explained("pmerge-write", clusterByPart(merged.observe(obs, count(lit(1)).as("n")), partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString))
-    val n = obs.get("n").asInstanceOf[Long]
-    // EXACT index rows for the affected partitions, computed from the
-    // persisted merged frame (row-identical to the just-written tmp;
-    // stats/records canonicalize the partition value to the same
-    // CAST-to-string space the tmp read-back yielded) BEFORE the swap
-    // moves its directories, staged in the index's own temp sibling.
-    // Exact — never widened — so pruning power does not decay under
-    // key churn (the r13 design widened old∪new and only ever grew;
-    // this rewrite replaces it, with the `_PENDING` marker carrying
-    // crash soundness instead of over-inclusion).
-    val tmpSchema = StructType(merged.schema.map(f =>
-      if (f.name == partCol) f.copy(dataType = StringType) else f))
-    val staged = validIdx.map { idx =>
-      timed("stage-idx")(KeyIdx.stage(spark, io, targetPath,
-        merged, partCol, keys, target.schema, idx.nextVer))
-    }
-    // marker BEFORE the first live-directory mutation; removed only
-    // after the post-swap index rewrite completes. Any crash between
-    // leaves the marker and the next merge full-probes and rebuilds —
-    // the index can never be trusted against data it wasn't written
-    // for, whichever side of a torn swap the layout landed on.
-    KeyIdx.markPending(io, targetPath)
-    val tmpDirNames = io.listDirNames(tmp).filter(_.startsWith(prefix))
-    for (name <- tmpDirNames) {
-      val dst = new HPath(tgt, name)
-      val oldPart = io.path(dst.toString + ".old-pmerge")
-      io.delete(oldPart)
-      if (io.exists(dst)) io.rename(dst, oldPart)
-      io.rename(new HPath(tmp, name), dst)
-      io.delete(oldPart)
-    }
-    // an affected partition ABSENT from the merged output lost every
-    // row (all its keys moved to other partitions) — drop it, or the
-    // stale rows would duplicate their moved selves
-    val affectedNames = parts.map(v => prefix + ExternalCatalogUtils.escapePathName(v)).toSet ++
-      (if (hasNull) Set(prefix + ExternalCatalogUtils.DEFAULT_PARTITION_NAME) else Set.empty[String])
-    val removedNames = affectedNames -- tmpDirNames
-    for (name <- removedNames)
-      io.delete(new HPath(tgt, name))
-    // post-swap index rewrite: install the staged exact rows (and drop
-    // rows for deleted partitions), or rebuild from scratch when the
-    // pre-merge index was missing/invalid (one-time backfill, same
-    // cost class as the full probe this merge just paid)
-    timed("install-idx")(staged match {
-      case Some(stagedPath) =>
-        KeyIdx.install(spark, io, targetPath, stagedPath, partCol,
-          validIdx.get.nextVer, io.listDirNames(tgt), prefix)
-      case None =>
-        KeyIdx.rebuild(spark, io, targetPath,
-          spark.read.schema(tmpSchema).parquet(targetPath), partCol, keys)
-    })
-    KeyIdx.clearPending(io, targetPath)
-    io.delete(tmp)
-    n
-    } finally {
-      mergedCached.foreach(_.unpersist(blocking = false))
-      src.unpersist(blocking = false)
-    }
-  }
-
-  /** MANIFEST-COMMITTED partition-scoped MERGE — the flat-object-store
-    * form of [[mergePartitionedPath]] ([[graft.sources.ManifestStore]]
-    * for the commit protocol and why it exists). Identical MERGE
-    * semantics, probe pruning (the same `_keyidx`, validated against
-    * the manifest's live-partition list instead of directory names),
+  /** The partition-scoped MERGE protocol ([[mergeScoped]]) with the
+    * MANIFEST commit — the flat-object-store form of
+    * [[mergePartitionedPath]] ([[graft.sources.ManifestStore]] for the
+    * commit protocol and why it exists). Identical MERGE semantics,
+    * probe pruning (the same `_keyidx`, validated against the
+    * manifest's live-partition list instead of directory names),
     * partition budget, fencing, and row-count return; different
     * physical install: affected partitions land in a fresh generation
     * directory and become visible through ONE manifest-file commit,
@@ -434,14 +228,9 @@ object Upsert {
   def mergePartitionedManifest(spark: SparkSession, targetPath: String,
       source: DataFrame, keys: Seq[String], partCol: String,
       maxPartitions: Int = 4096,
-      leaseStaleMs: Long = SwapFs.DefaultLeaseStaleMs): Long = {
-    require(!keys.contains(partCol),
-      s"mergePartitionedManifest: partition column $partCol cannot also be a merge key")
-    val io = SwapFs.forPath(spark, targetPath)
-    io.withLease(targetPath, leaseStaleMs) {
-      mergeManifestLocked(spark, io, targetPath, source, keys, partCol, maxPartitions)
-    }
-  }
+      leaseStaleMs: Long = SwapFs.DefaultLeaseStaleMs): Long =
+    mergeScoped(spark, targetPath, source, keys, partCol, maxPartitions, leaseStaleMs)(
+      new Manifest(_, _, _, _))
 
   /** Resolve a manifest-committed target to a DataFrame: the highest
     * committed generation's live partitions, partition column
@@ -449,14 +238,14 @@ object Upsert {
     * non-manifest target. */
   def readManifest(spark: SparkSession, targetPath: String): DataFrame = {
     val io = SwapFs.forPath(spark, targetPath)
-    val state = graft.sources.ManifestStore.read(io, targetPath).getOrElse(
+    val state = ManifestStore.read(io, targetPath).getOrElse(
       sys.error(s"readManifest: $targetPath has no committed manifest — not a manifest target " +
         "(plain partitioned layouts read directly with spark.read.parquet)"))
     manifestFrame(spark, targetPath, state)
   }
 
   private def manifestFrame(spark: SparkSession, targetPath: String,
-      state: graft.sources.ManifestStore.State): DataFrame = {
+      state: ManifestStore.State): DataFrame = {
     // one read per generation group (basePath recovers the partition
     // column from the directory names), unioned with the head group's
     // schema as the alignment target — partition-column TYPE INFERENCE
@@ -478,49 +267,233 @@ object Upsert {
     }
   }
 
-  private def mergeManifestLocked(spark: SparkSession, io: SwapFs, targetPath: String,
-      source: DataFrame, keys: Seq[String], partCol: String, maxPartitions: Int): Long = {
-    import graft.sources.ManifestStore
+  /** Run `a` on a thread started for this call and `b` on the
+    * caller's, concurrently. A new thread copies the caller's Spark
+    * local properties (job group, description, tags) when it is
+    * created, so `a`'s jobs carry the caller's current group; a pooled
+    * thread (`ExecutionContext.global`) keeps the copy it took when the
+    * pool grew, and `sc.cancelJobGroup` would miss its jobs. */
+  private[operators] def overlapped[A, B](a: => A)(b: => B): (A, B) = {
+    val ra = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[A]]()
+    val t = new Thread(() => ra.set(
+      try scala.util.Success(a) catch { case e: Throwable => scala.util.Failure(e) }))
+    t.setDaemon(true)
+    t.start()
+    val rb = try b finally t.join()
+    (ra.get.get, rb)
+  }
+
+  /** ONE bounded job fetching the batch's distinct partition values
+    * AND its per-partition key bounds (the r14 form paid two driver
+    * jobs: a distinct-p collect plus a separate global min/max
+    * aggregate). Bounded driver fetch: a batch accidentally keyed on
+    * a high-cardinality partition column must not materialize every
+    * distinct value before the caller's loud budget failure fires —
+    * the truncated set alone already exceeds maxPartitions. Global
+    * bounds fold from the per-partition rows through a LOCAL relation
+    * (min-of-mins / max-of-maxes — associative, so the fold is
+    * exact), keeping every type comparison inside Spark expressions. */
+  private def srcPartsAndBounds(spark: SparkSession, srcPK: DataFrame,
+      keys: Seq[String], maxPartitions: Int)
+      : (Array[String], Boolean, Set[String], DataFrame) = {
+    val pbAggs = keys.flatMap(k =>
+      Seq(min(col(k)).as(s"bmin_$k"), max(col(k)).as(s"bmax_$k")))
+    val srcPartDf = srcPK.groupBy(col("__graft_p")).agg(pbAggs.head, pbAggs.tail: _*)
+      .limit(maxPartitions + 1)
+    val srcPartRows = timed("srcparts")(srcPartDf.collect())
+    val srcHasNull = srcPartRows.exists(_.isNullAt(0))
+    val srcPartVals = srcPartRows.filterNot(_.isNullAt(0)).map(_.getString(0))
+    val srcPartCanon = srcPartVals.toSet ++
+      (if (srcHasNull) Set(KeyIdx.NullPart) else Set.empty)
+    val folds = keys.map(k => min(col(s"bmin_$k")).as(s"bmin_$k")) ++
+      keys.map(k => max(col(s"bmax_$k")).as(s"bmax_$k"))
+    val boundsLocal = spark.createDataFrame(
+        java.util.Arrays.asList(srcPartRows: _*), srcPartDf.schema)
+      .agg(folds.head, folds.tail: _*)
+    (srcPartVals, srcHasNull, srcPartCanon, boundsLocal)
+  }
+
+  /** What the two commit strategies of the one partition-scoped MERGE
+    * protocol ([[mergeScoped]]) do differently; everything else is
+    * shared. One instance per merge call, built inside its lease. */
+  private sealed abstract class Commit(val spark: SparkSession, val io: SwapFs,
+      val targetPath: String, val partCol: String) {
     val prefix = s"$partCol="
-    val tgt = io.path(targetPath)
-    require(!io.listDirNames(tgt).exists(_.startsWith(prefix)),
-      s"mergePartitionedManifest: $targetPath holds an in-place partitioned layout — " +
-        "use mergePartitionedPath, or migrate by rewriting into a fresh manifest target")
-    val state0 = ManifestStore.read(io, targetPath)
-    if (state0.isEmpty) {
+    val tgt: HPath = io.path(targetPath)
+    /** API name, plan label and advice for an over-budget batch. */
+    def api: String; def tag: String; def overBudget: String
+    /** Layout guard, then the crash recovery that must run before
+      * anything reads the target: its live frame and partition
+      * directory names, or None on first use. */
+    def open(): Option[(DataFrame, Set[String])]
+    /** Run the first write (given its directory) and commit it;
+      * returns the directory written. */
+    def writeFirst(write: String => Unit): String
+    /** Install the merged partition directories `written` from `tmp`,
+      * drop the `emptied` ones; returns the new live names. */
+    def install(tmp: HPath, written: Set[String], emptied: Set[String]): Set[String]
+    /** The committed target, for a full index rebuild. */
+    def committed(tmpSchema: StructType): DataFrame
+    def cleanup(): Unit = ()
+  }
+
+  /** In-place commit: each merged partition directory swaps into the
+    * target by rename (`d=X` → `d=X.old-pmerge`, tmp → `d=X`). */
+  private final class InPlace(sp: SparkSession, fs: SwapFs, path: String, pc: String)
+      extends Commit(sp, fs, path, pc) {
+    def api = "mergePartitionedPath"; def tag = "pmerge"
+    def overBudget = "use mergeIntoPath (full rewrite) for rewrite-everything batches"
+
+    def open(): Option[(DataFrame, Set[String])] = {
+      require(ManifestStore.generations(io, targetPath).isEmpty,
+        s"mergePartitionedPath: $targetPath is manifest-committed — use mergePartitionedManifest " +
+          "(mixing in-place swaps into a manifest target would mutate referenced directories)")
+      io.recoverSwap(tgt, io.path(targetPath + ".old-merge"))
+      if (!io.exists(tgt)) return None
+      // crash recovery BEFORE anything reads the target: restore or
+      // drop each partition's swap leftover `d=X.old-pmerge`
+      // ([[SwapFs.recoverSwap]]). The prior run's `_PENDING` marker is
+      // still in place (it is only removed after a completed post-swap
+      // index rewrite), so no stale index row can prune the restored
+      // rows out of the probe.
+      for (name <- io.listDirNames(tgt) if name.endsWith(".old-pmerge"))
+        io.recoverSwap(new HPath(tgt, name.stripSuffix(".old-pmerge")), new HPath(tgt, name))
+      Some((spark.read.parquet(targetPath), io.listDirNames(tgt)))
+    }
+
+    def writeFirst(write: String => Unit): String = { write(targetPath); targetPath }
+
+    def install(tmp: HPath, written: Set[String], emptied: Set[String]): Set[String] = {
+      for (name <- written)
+        io.swapIn(new HPath(tmp, name), new HPath(tgt, name), new HPath(tgt, name + ".old-pmerge"))
+      for (name <- emptied) io.delete(new HPath(tgt, name))
+      io.listDirNames(tgt)
+    }
+
+    def committed(tmpSchema: StructType): DataFrame =
+      spark.read.schema(tmpSchema).parquet(targetPath)
+  }
+
+  /** Manifest commit: merged partition directories move into a fresh
+    * generation `_g<n+1>`, visible through one manifest file. */
+  private final class Manifest(sp: SparkSession, fs: SwapFs, path: String, pc: String)
+      extends Commit(sp, fs, path, pc) {
+    def api = "mergePartitionedManifest"; def tag = "mmerge"
+    def overBudget = "rewrite into a fresh generation wholesale instead"
+    private var state = ManifestStore.State(0L, Map.empty)
+
+    def open(): Option[(DataFrame, Set[String])] = {
+      require(!io.listDirNames(tgt).exists(_.startsWith(prefix)),
+        s"mergePartitionedManifest: $targetPath holds an in-place partitioned layout — " +
+          "use mergePartitionedPath, or migrate by rewriting into a fresh manifest target")
+      ManifestStore.read(io, targetPath).map { st =>
+        state = st
+        (timed("mframe")(manifestFrame(spark, targetPath, st)), st.parts.keySet)
+      }
+    }
+
+    def writeFirst(write: String => Unit): String = {
       val gen0 = s"$targetPath/_g0"
-      io.delete(io.path(gen0))
-      val obs0 = Observation()
-      clusterByPart(source.observe(obs0, count(lit(1)).as("n")), partCol)
-        .write.mode("overwrite").partitionBy(partCol).parquet(gen0)
+      io.delete(io.path(gen0)) // stale leftover from a crashed first write
+      write(gen0)
       val parts = io.listDirNames(io.path(gen0)).filter(_.startsWith(prefix))
       ManifestStore.commit(io, targetPath,
         ManifestStore.State(0L, parts.map(n => n -> s"_g0/$n").toMap))
-      val wroteSchema = StructType(source.schema.map(f =>
-        if (f.name == partCol) f.copy(dataType = StringType) else f))
-      KeyIdx.rebuild(spark, io, targetPath,
-        spark.read.schema(wroteSchema).parquet(gen0), partCol, keys)
-      return obs0.get("n").asInstanceOf[Long]
+      gen0
     }
-    val state = state0.get
-    val target = timed("mframe")(manifestFrame(spark, targetPath, state))
-    // same persist rationale as [[mergePartitionedLocked]]: the batch
-    // plan executes once, not once per consultation
+
+    def install(tmp: HPath, written: Set[String], emptied: Set[String]): Set[String] = {
+      // install into a FRESH generation: these renames move just-written
+      // unreferenced data — a torn copy here is invisible (nothing
+      // resolves through it until the manifest commits below)
+      val newGen = state.gen + 1
+      val genDir = io.path(s"$targetPath/_g$newGen")
+      io.delete(genDir) // stale leftover from a crashed attempt at this generation
+      io.fs.mkdirs(genDir)
+      for (name <- written)
+        io.rename(new HPath(tmp, name), new HPath(genDir, name))
+      state = ManifestStore.State(newGen,
+        (state.parts -- emptied -- written) ++ written.map(nm => nm -> s"_g$newGen/$nm"))
+      // THE commit: one manifest file; before it readers resolve the old
+      // table, after it the new one — never a mix
+      ManifestStore.commit(io, targetPath, state)
+      state.parts.keySet
+    }
+
+    def committed(tmpSchema: StructType): DataFrame = manifestFrame(spark, targetPath, state)
+
+    override def cleanup(): Unit = timed("gc")(ManifestStore.gc(io, targetPath))
+  }
+
+  /** The one partition-scoped MERGE protocol behind
+    * [[mergePartitionedPath]] and [[mergePartitionedManifest]]: fence,
+    * open the target through the commit strategy, then either write it
+    * for the first time or merge the batch into it ([[mergeLive]]). */
+  private def mergeScoped(spark: SparkSession, targetPath: String,
+      source: DataFrame, keys: Seq[String], partCol: String, maxPartitions: Int,
+      leaseStaleMs: Long)(strategy: (SparkSession, SwapFs, String, String) => Commit): Long = {
+    val io = SwapFs.forPath(spark, targetPath)
+    val commit = strategy(spark, io, targetPath, partCol)
+    require(!keys.contains(partCol),
+      s"${commit.api}: partition column $partCol cannot also be a merge key")
+    io.withLease(targetPath, leaseStaleMs) {
+      commit.open() match {
+        case Some((target, liveNames)) =>
+          mergeLive(commit, target, liveNames, source, keys, maxPartitions)
+        case None =>
+          val obs0 = Observation()
+          val dir = commit.writeFirst(clusterByPart(
+            source.observe(obs0, count(lit(1)).as("n")), partCol)
+            .write.mode("overwrite").partitionBy(partCol).parquet(_))
+          // index from the WRITTEN layout, not a second execution of the
+          // caller's source plan (which may be an arbitrarily expensive
+          // upstream job): a column-pruned read-back of the fresh parquet
+          // yields the same per-partition stats for one metadata-cheap
+          // scan — the merge path's own tmp-read pattern
+          KeyIdx.rebuild(spark, io, targetPath,
+            spark.read.schema(stringPart(source.schema, partCol)).parquet(dir), partCol, keys)
+          obs0.get("n").asInstanceOf[Long]
+      }
+    }
+  }
+
+  /** `schema` with the partition column as read back from directory
+    * names (string). */
+  private def stringPart(schema: StructType, partCol: String): StructType =
+    StructType(schema.map(f => if (f.name == partCol) f.copy(dataType = StringType) else f))
+
+  private def mergeLive(commit: Commit, target: DataFrame, liveNames: Set[String],
+      source: DataFrame, keys: Seq[String], maxPartitions: Int): Long = {
+    import commit.{spark, io, targetPath, partCol, prefix}
+    // The source batch is consulted by FOUR independent jobs per merge
+    // (thin-frame build, anti-join probe side, union side of the
+    // merged write — and the caller's plan behind it is often a full
+    // dedupe over an upstream fact). Persist the BATCH (O(batch) rows
+    // — the small side of an incremental merge by definition;
+    // MEMORY_AND_DISK spills, never OOMs) so that plan executes once
+    // per merge, not once per consultation.
     val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // projection + one-job partition/bounds fetch: see
-    // [[mergePartitionedLocked]] for the rationale
+    // Thin (partition, keys) projection of the persisted batch. NO
+    // distinct / persist of its own (the r14 form paid a full shuffle
+    // to dedupe it): every consumer — the bounds rollup, the hash
+    // fetch (distinct inside), the semi join — is duplicate-
+    // insensitive, so the projection just narrows the cached batch.
     val srcPK = src.select(col(partCol).cast("string").as("__graft_p") +: keys.map(col): _*)
     var mergedCached: Option[DataFrame] = None
     try {
     val srcKeys = srcPK.select(keys.map(col): _*)
-    // overlapped fetch: see [[mergePartitionedLocked]]
-    val srcPartsF = concurrent.Future(
+    // the batch-side bounds fetch and the index meta read are
+    // independent (source cache vs index parquet) — overlap them
+    // (guide §2.6); the srcparts phase print then runs concurrently
+    // with readValid's, so their wall-clocks are not additive.
+    // readValid validates the key index that bounds the probe below:
+    // it only READS partitions whose recorded key ranges overlap the
+    // batch and whose record-level key-hash rows hold one of its keys
+    // — O(touched) I/O instead of O(target)
+    val ((srcPartVals, srcHasNull, srcPartCanon, boundsLocal), validIdx) = overlapped(
       srcPartsAndBounds(spark, srcPK, keys, maxPartitions))(
-      concurrent.ExecutionContext.global)
-    val validIdx = timed("readValid")(KeyIdx.readValid(spark, io, targetPath, target.schema,
-      state.parts.keySet, prefix, partCol, keys))
-    val (srcPartVals, srcHasNull, srcPartCanon, boundsLocal) =
-      concurrent.Await.result(srcPartsF, concurrent.duration.Duration.Inf)
+      timed("readValid")(KeyIdx.readValid(spark, io, targetPath, target.schema,
+        liveNames, prefix, partCol, keys)))
     val probed = validIdx match {
       case Some(idx) =>
         val cand = timed("candidates")(KeyIdx.candidates(spark, io, targetPath, idx,
@@ -537,11 +510,19 @@ object Upsert {
     val hasNull = srcHasNull || hitRows.exists(_.isNullAt(0))
     val parts = (srcPartVals ++ hitRows.filterNot(_.isNullAt(0)).map(_.getString(0))).distinct
     require(parts.length + (if (hasNull) 1 else 0) <= maxPartitions,
-      s"mergePartitionedManifest: batch touches more than $maxPartitions partitions " +
-        s"of $targetPath — rewrite into a fresh generation wholesale instead")
+      s"${commit.api}: batch touches more than $maxPartitions partitions " +
+        s"of $targetPath — ${commit.overBudget}")
     val inParts = col(partCol).cast("string").isin(parts.toIndexedSeq: _*)
     val scoped = target.filter(if (hasNull) inParts || col(partCol).isNull else inParts)
-    // persist-for-stage rationale: see [[mergePartitionedLocked]]
+    // When a valid index will be staged below, persist the merged
+    // frame: the stage's two jobs (meta stats + record rows) then
+    // scan the cache the write job populates instead of re-reading
+    // the just-written tmp parquet (guide §1.2 step 1) — measured
+    // best-of-3 at sf0.1: ~1 s/gate faster than the tmp re-read form
+    // even with the stage jobs already overlapped. MEMORY_AND_DISK,
+    // unpersisted in the finally. At true incremental scale merged is
+    // O(touched partitions) ≈ O(batch); this gate fixture's batches
+    // touch every partition, the worst case, and still win.
     val merged0 = upsertBatch(scoped, src, keys)
     val merged = if (validIdx.isEmpty) merged0 else {
       val m = merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -550,41 +531,50 @@ object Upsert {
     val tmp = io.path(targetPath + ".tmp-pmerge")
     io.delete(tmp)
     val obs = Observation()
-    timed("write")(explained("mmerge-write", clusterByPart(merged.observe(obs, count(lit(1)).as("n")), partCol))
+    timed("write")(explained(s"${commit.tag}-write",
+      clusterByPart(merged.observe(obs, count(lit(1)).as("n")), partCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString))
     val n = obs.get("n").asInstanceOf[Long]
+    // EXACT index rows for the affected partitions, computed from the
+    // persisted merged frame (row-identical to the just-written tmp;
+    // stats/records canonicalize the partition value to the same
+    // CAST-to-string space the tmp read-back yielded) BEFORE the
+    // install moves its directories, staged in the index's own temp
+    // sibling. Exact — never widened — so pruning power does not decay
+    // under key churn (the r13 design widened old∪new and only ever
+    // grew; this rewrite replaces it, with the `_PENDING` marker
+    // carrying crash soundness instead of over-inclusion).
     val staged = validIdx.map { idx =>
       timed("stage-idx")(KeyIdx.stage(spark, io, targetPath,
         merged, partCol, keys, target.schema, idx.nextVer))
     }
+    // marker BEFORE the first live-directory mutation; removed only
+    // after the post-install index rewrite completes. Any crash between
+    // leaves the marker and the next merge full-probes and rebuilds —
+    // the index can never be trusted against data it wasn't written
+    // for, whichever side of a torn install the layout landed on.
     KeyIdx.markPending(io, targetPath)
-    // install into a FRESH generation: these renames move just-written
-    // unreferenced data — a torn copy here is invisible (nothing
-    // resolves through it until the manifest commits below)
-    val newGen = state.gen + 1
-    val genDir = io.path(s"$targetPath/_g$newGen")
-    io.delete(genDir) // stale leftover from a crashed attempt at this generation
-    io.fs.mkdirs(genDir)
-    val tmpDirNames = io.listDirNames(tmp).filter(_.startsWith(prefix))
-    for (name <- tmpDirNames)
-      io.rename(new HPath(tmp, name), new HPath(genDir, name))
+    val written = io.listDirNames(tmp).filter(_.startsWith(prefix))
+    // an affected partition ABSENT from the merged output lost every
+    // row (all its keys moved to other partitions) — the install drops
+    // it, or the stale rows would duplicate their moved selves
     val affectedNames = parts.map(v => prefix + ExternalCatalogUtils.escapePathName(v)).toSet ++
       (if (hasNull) Set(prefix + ExternalCatalogUtils.DEFAULT_PARTITION_NAME) else Set.empty[String])
-    val removedNames = affectedNames -- tmpDirNames
-    val newParts = (state.parts -- removedNames -- tmpDirNames) ++
-      tmpDirNames.map(nm => nm -> s"_g$newGen/$nm")
-    // THE commit: one manifest file; before it readers resolve the old
-    // table, after it the new one — never a mix
-    ManifestStore.commit(io, targetPath, ManifestStore.State(newGen, newParts))
+    val newLive = commit.install(tmp, written, affectedNames -- written)
+    // post-install index rewrite: install the staged exact rows (and
+    // drop rows for deleted partitions), or rebuild from scratch when
+    // the pre-merge index was missing/invalid (one-time backfill, same
+    // cost class as the full probe this merge just paid)
     timed("install-idx")(staged match {
       case Some(stagedPath) =>
         KeyIdx.install(spark, io, targetPath, stagedPath, partCol,
-          validIdx.get.nextVer, newParts.keySet, prefix)
+          validIdx.get.nextVer, newLive, prefix)
       case None =>
-        KeyIdx.rebuild(spark, io, targetPath, readManifest(spark, targetPath), partCol, keys)
+        KeyIdx.rebuild(spark, io, targetPath,
+          commit.committed(stringPart(merged.schema, partCol)), partCol, keys)
     })
     KeyIdx.clearPending(io, targetPath)
-    timed("gc")(ManifestStore.gc(io, targetPath))
+    commit.cleanup()
     io.delete(tmp)
     n
     } finally {
@@ -750,42 +740,46 @@ private[operators] object KeyIdx {
     else math.min(MaxBucketBits, 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1))
   }
 
-  private val recSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("kh", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("p", StringType),
-    org.apache.spark.sql.types.StructField("ver", org.apache.spark.sql.types.LongType)))
+  private val recSchema = StructType.fromDDL("kh BIGINT, p STRING, ver BIGINT")
 
-  private def writeB(io: SwapFs, baseDir: HPath, bBits: Int): Unit = {
-    val out = io.fs.create(new HPath(baseDir, "_B"), true)
-    try out.write(s"B=$bBits\n#END".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeB(io: SwapFs, baseDir: HPath, bBits: Int): Unit =
+    io.writeText(new HPath(baseDir, "_B"), s"B=$bBits\n#END", overwrite = true)
 
   private def readB(io: SwapFs, baseDir: HPath): Option[Int] =
     try {
-      val p = new HPath(baseDir, "_B")
-      val st = io.fs.getFileStatus(p)
-      val buf = new Array[Byte](st.getLen.toInt)
-      val in = io.fs.open(p)
-      try in.readFully(0L, buf) finally in.close()
-      val s = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
+      val s = io.readText(new HPath(baseDir, "_B"))
       if (!s.endsWith("#END")) None
       else Some(s.stripSuffix("\n#END").stripSuffix("#END").trim.stripPrefix("B=").toInt)
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Rename the parquet files directly in `dir` to `name(0)`,
+    * `name(1)`, … — installs a staged chunk into the live index. */
+  private def moveParquet(io: SwapFs, dir: HPath)(name: Int => HPath): Unit =
+    io.fs.listStatus(dir).iterator.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .zipWithIndex.foreach { case (p, i) => io.rename(p, name(i)) }
+
+  /** Live partition values (raw canonical strings) from the target's
+    * live partition-directory names, which are escaped. */
+  private def liveValues(liveDirNames: Set[String], prefix: String): Set[String] =
+    liveDirNames.iterator
+      .filter(n => n.startsWith(prefix) && !n.contains(".old-pmerge"))
+      .map(_.stripPrefix(prefix))
+      .map(d => if (d == NullPart) NullPart else ExternalCatalogUtils.unescapePathName(d))
+      .toSet
 
   /** Chunk-count ceiling before [[install]] compacts the index back to
     * one meta chunk + a freshly bucketed record base. Chunks make
     * per-merge index maintenance O(1) files and O(affected) bytes;
     * superseded rows accumulate until compaction folds them out
-    * (amortized O(index / MaxChunks) per merge). */
-  val MaxChunks = 16
+    * (amortized O(index / MaxChunks) per merge). `var` for spec-scale
+    * fixtures only, like [[RecBucketRows]]. */
+  @volatile private[operators] var MaxChunks: Int = 16
 
   def markPending(io: SwapFs, targetPath: String): Unit = {
     val marker = io.path(targetPath + "/" + Dir + "/" + PendingName)
     // presence flag only — content is never read, so a torn create
     // still invalidates
-    val out = io.fs.create(marker, true)
-    out.close()
+    io.writeText(marker, "", overwrite = true)
   }
 
   def clearPending(io: SwapFs, targetPath: String): Unit =
@@ -809,23 +803,15 @@ private[operators] object KeyIdx {
     // sequentially), so the stage phase costs max(job) instead of
     // sum(job); per-merge fixed latency is paid on every incremental
     // batch, so every overlapped job shows
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val metaF = Future {
+    Upsert.overlapped(
       stats(df, partCol, keys, targetSchema)
         .withColumn("ver", lit(ver))
         .coalesce(1)
-        .write.parquet(new HPath(stagedPath, "meta").toString)
-    }
-    val recF = Future {
+        .write.parquet(new HPath(stagedPath, "meta").toString))(
       records(df, partCol, keys, targetSchema)
         .withColumn("ver", lit(ver))
         .coalesce(RecStageFiles)
-        .write.parquet(new HPath(stagedPath, "rec").toString)
-    }
-    Await.result(metaF, Duration.Inf)
-    Await.result(recF, Duration.Inf)
+        .write.parquet(new HPath(stagedPath, "rec").toString))
     stagedPath
   }
 
@@ -850,18 +836,8 @@ private[operators] object KeyIdx {
     val live = io.path(targetPath + "/" + Dir)
     val recLive = new HPath(live, RecDir)
     if (!io.exists(recLive)) io.fs.mkdirs(recLive)
-    var i = 0
-    for (st <- io.fs.listStatus(new HPath(stagedPath, "meta"))
-         if st.getPath.getName.endsWith(".parquet")) {
-      io.rename(st.getPath, new HPath(live, s"c$ver-$i.parquet"))
-      i += 1
-    }
-    var j = 0
-    for (st <- io.fs.listStatus(new HPath(stagedPath, "rec"))
-         if st.getPath.getName.endsWith(".parquet")) {
-      io.rename(st.getPath, new HPath(recLive, s"r$ver-$j.parquet"))
-      j += 1
-    }
+    moveParquet(io, new HPath(stagedPath, "meta"))(i => new HPath(live, s"c$ver-$i.parquet"))
+    moveParquet(io, new HPath(stagedPath, "rec"))(j => new HPath(recLive, s"r$ver-$j.parquet"))
     io.delete(stagedPath)
     val chunks = io.fs.listStatus(live).count(_.getPath.getName.endsWith(".parquet"))
     if (chunks > MaxChunks) compact(spark, io, targetPath, partCol, liveDirNames, prefix)
@@ -876,50 +852,57 @@ private[operators] object KeyIdx {
     * rather than trusting a half-compacted index. */
   private def compact(spark: SparkSession, io: SwapFs, targetPath: String,
       partCol: String, liveDirNames: Set[String], prefix: String): Unit = {
-    val live = io.path(targetPath + "/" + Dir)
-    val recLive = new HPath(live, RecDir)
     val pn = pName(partCol)
-    val liveVals = liveDirNames.iterator
-      .filter(n => n.startsWith(prefix) && !n.contains(".old-pmerge"))
-      .map(_.stripPrefix(prefix))
-      .map(d => if (d == NullPart) NullPart else ExternalCatalogUtils.unescapePathName(d))
-      .toSeq
-    val winners = spark.read.parquet(live.toString)
-      .filter(col(pn).isin(liveVals: _*))
+    val winners = spark.read.parquet(io.path(targetPath + "/" + Dir).toString)
+      .filter(col(pn).isin(liveValues(liveDirNames, prefix).toSeq: _*))
       .withColumn("__rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col(pn))
           .orderBy(col("ver").desc)))
       .filter(col("__rk") === 1).drop("__rk")
-    val tmp = io.path(targetPath + "/" + Dir + ".tmpc")
+    // clear only the live meta chunk files: the `_PENDING` marker stays
+    replace(spark, io, targetPath, ".tmpc", winners, pn, "c0-z",
+      live => for (st <- io.fs.listStatus(live) if st.getPath.getName.endsWith(".parquet"))
+        io.delete(st.getPath)) { wRows =>
+      // winner (p, ver) pairs from the written compacted meta
+      val winnerKeys = wRows.map(r => s"${r.getString(0)}\u0000${r.getLong(1)}").toSeq
+      readRecordRows(spark, io, targetPath, None).map(
+        _.filter(concat_ws("\u0000", col("p"), col("ver")).isin(winnerKeys: _*)))
+    }
+  }
+
+  /** Write a fresh index into the sibling `<Dir><suffix>` — `meta` as
+    * one chunk, then the record rows `recs(metaRows)` as a base
+    * bucketed for the meta rows' key total (`metaRows`: `(p, ver, nk)`
+    * from the written meta — one small file, bounded by the partition
+    * count) — and install it: `clear` empties the live side, the
+    * record base goes in, and the meta chunk goes in LAST. */
+  private def replace(spark: SparkSession, io: SwapFs, targetPath: String, suffix: String,
+      meta: DataFrame, pn: String, metaName: String, clear: HPath => Unit)(
+      recs: Array[org.apache.spark.sql.Row] => Option[DataFrame]): Unit = {
+    val live = io.path(targetPath + "/" + Dir)
+    val recLive = new HPath(live, RecDir)
+    val tmp = io.path(targetPath + "/" + Dir + suffix)
     io.delete(tmp)
-    winners.coalesce(1).write.parquet(new HPath(tmp, "meta").toString)
-    // winner (p, ver) pairs + surviving key total, from the written
-    // compacted meta (one small file) — bounded by the partition count
-    val wRows = spark.read.parquet(new HPath(tmp, "meta").toString)
+    meta.coalesce(1).write.parquet(new HPath(tmp, "meta").toString)
+    val metaRows = spark.read.parquet(new HPath(tmp, "meta").toString)
       .select(col(pn), col("ver"), col("nk")).collect()
-    val winnerKeys = wRows.map(r => s"${r.getString(0)}\u0000${r.getLong(1)}").toSeq
-    val bBits = chooseB(wRows.map(_.getLong(2)).sum)
-    val allRec = readRecordRows(spark, io, targetPath, None)
-    allRec.foreach { rows =>
-      rows.filter(concat_ws("\u0000", col("p"), col("ver")).isin(winnerKeys: _*))
-        .withColumn("kb", kbCol(bBits))
-        .write.partitionBy("kb").parquet(new HPath(tmp, "base").toString)
-    }
-    // install: replace meta chunk files, then the whole record side
-    for (st <- io.fs.listStatus(live) if st.getPath.getName.endsWith(".parquet"))
-      io.delete(st.getPath)
-    var i = 0
-    for (st <- io.fs.listStatus(new HPath(tmp, "meta"))
-         if st.getPath.getName.endsWith(".parquet")) {
-      io.rename(st.getPath, new HPath(live, s"c0-z$i.parquet"))
-      i += 1
-    }
-    if (allRec.nonEmpty) {
+    val bBits = chooseB(metaRows.map(_.getLong(2)).sum)
+    val base = recs(metaRows)
+    base.foreach(_.withColumn("kb", kbCol(bBits))
+      .write.partitionBy("kb").parquet(new HPath(tmp, "base").toString))
+    clear(live)
+    if (base.nonEmpty) {
       io.delete(recLive)
       io.fs.mkdirs(recLive)
       io.rename(new HPath(tmp, "base"), new HPath(recLive, "base"))
       writeB(io, new HPath(recLive, "base"), bBits)
     }
+    // meta chunk LAST: a rebuild's `clear` also removed any `_PENDING`
+    // marker, and at target creation there is none — a crash before
+    // this rename leaves no meta chunk, so readValid rejects the index
+    // instead of trusting a record side that has not landed (an empty
+    // record side would prune partitions that hold matched keys)
+    moveParquet(io, new HPath(tmp, "meta"))(i => new HPath(live, s"$metaName$i.parquet"))
     io.delete(tmp)
   }
 
@@ -930,34 +913,10 @@ private[operators] object KeyIdx {
     * an older layout, external writer, crash marker, changed merge
     * definition). */
   def rebuild(spark: SparkSession, io: SwapFs, targetPath: String, df: DataFrame,
-      partCol: String, keys: Seq[String]): Unit = {
-    val staged = io.path(targetPath + "/" + Dir + ".tmp")
-    io.delete(staged)
-    stats(df, partCol, keys, df.schema)
-      .withColumn("ver", lit(0L))
-      .coalesce(1)
-      .write.parquet(new HPath(staged, "meta").toString)
-    val totalKeys = spark.read.parquet(new HPath(staged, "meta").toString)
-      .agg(sum(col("nk"))).collect().headOption
-      .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).getOrElse(0L)
-    val bBits = chooseB(totalKeys)
-    records(df, partCol, keys, df.schema)
-      .withColumn("ver", lit(0L))
-      .withColumn("kb", kbCol(bBits))
-      .write.partitionBy("kb").parquet(new HPath(staged, "base").toString)
-    val live = io.path(targetPath + "/" + Dir)
-    io.delete(live)
-    io.fs.mkdirs(new HPath(live, RecDir))
-    var i = 0
-    for (st <- io.fs.listStatus(new HPath(staged, "meta"))
-         if st.getPath.getName.endsWith(".parquet")) {
-      io.rename(st.getPath, new HPath(live, s"c0-$i.parquet"))
-      i += 1
-    }
-    io.rename(new HPath(staged, "base"), new HPath(live, RecDir + "/base"))
-    writeB(io, new HPath(live, RecDir + "/base"), bBits)
-    io.delete(staged)
-  }
+      partCol: String, keys: Seq[String]): Unit =
+    replace(spark, io, targetPath, ".tmp",
+      stats(df, partCol, keys, df.schema).withColumn("ver", lit(0L)), pName(partCol), "c0-",
+      io.delete(_))(_ => Some(records(df, partCol, keys, df.schema).withColumn("ver", lit(0L))))
 
   /** A validated index: its WINNER meta frame (max-ver row per
     * partition), the winner version per partition (record-row
@@ -1009,16 +968,7 @@ private[operators] object KeyIdx {
     // winner per partition = its max-ver row (later chunks supersede)
     val winnerVer = metaRows.groupBy(_.getString(pnIdx))
       .map { case (pv, rs) => pv -> rs.map(_.getLong(verIdx)).max }
-    val statVals = winnerVer.keySet
-    val diskVals = liveDirNames.iterator
-      .filter(n => n.startsWith(prefix) && !n.contains(".old-pmerge"))
-      .map(_.stripPrefix(prefix))
-      .toSet
-    // disk names are escaped; index values are raw canonical strings
-    if (!diskVals.forall(d =>
-      statVals.contains(
-        if (d == NullPart) NullPart else ExternalCatalogUtils.unescapePathName(d))))
-      return None
+    if (!liveValues(liveDirNames, prefix).forall(winnerVer.contains)) return None
     val winnerRows = metaRows.filter(r =>
       winnerVer(r.getString(pnIdx)) == r.getLong(verIdx))
     // LOCAL relation: the candidates range phase scans these few rows

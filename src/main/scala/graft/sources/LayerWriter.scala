@@ -66,14 +66,11 @@ object LayerWriter {
       val tgt = io.path(path)
       val tmp = io.path(path + ".tmp-compact")
       val old = io.path(path + ".old-compact")
-      if (!io.exists(tgt) && io.exists(old)) io.rename(old, tgt)
+      io.recoverSwap(tgt, old)
       val before = io.dataFileCount(tgt)
       io.delete(tmp)
       writeFact(spark.read.parquet(path), tmp.toString, dateCol, maxRecordsPerFile)
-      io.delete(old)
-      io.rename(tgt, old)
-      io.rename(tmp, tgt)
-      io.delete(old)
+      io.swapIn(tmp, tgt, old)
       (before, io.dataFileCount(tgt))
     }
   }

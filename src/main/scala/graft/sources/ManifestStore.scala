@@ -40,9 +40,7 @@ object ManifestStore {
   /** Live state: generation number + map of partition directory name
     * (`d=2024-01-01`, escaped) → target-relative physical path
     * (`_g3/d=2024-01-01`). */
-  final case class State(gen: Long, parts: Map[String, String]) {
-    def genDir(g: Long): String = s"_g$g"
-  }
+  final case class State(gen: Long, parts: Map[String, String])
 
   private val Prefix = "_manifest."
 
@@ -71,11 +69,7 @@ object ManifestStore {
 
   private def readAt(io: SwapFs, target: String, g: Long): State = {
     val p = manifestPath(io, target, g)
-    val st = io.fs.getFileStatus(p)
-    val buf = new Array[Byte](st.getLen.toInt)
-    val in = io.fs.open(p)
-    try in.readFully(0L, buf) finally in.close()
-    val lines = new String(buf, java.nio.charset.StandardCharsets.UTF_8).split("\n", -1).toSeq
+    val lines = io.readText(p).split("\n", -1).toSeq
     require(lines.nonEmpty && lines.head == s"gen=$g" && lines.contains("#END"),
       s"ManifestStore: $p is torn or malformed (missing header/sentinel) — refusing to " +
         "resolve a partial table; restore the previous manifest or recommit")
@@ -97,12 +91,9 @@ object ManifestStore {
       s"ManifestStore: $dst already exists — a concurrent writer committed this generation")
     val tmp = io.path(s"$target/$Prefix${state.gen}.tmp")
     io.delete(tmp)
-    val out = io.fs.create(tmp, true)
-    try {
-      val body = (s"gen=${state.gen}" +:
-        state.parts.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }) :+ "#END"
-      out.write(body.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
+    val body = (s"gen=${state.gen}" +:
+      state.parts.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }) :+ "#END"
+    io.writeText(tmp, body.mkString("\n"), overwrite = true)
     io.rename(tmp, dst)
   }
 

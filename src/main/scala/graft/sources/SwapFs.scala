@@ -59,6 +59,45 @@ final class SwapFs private[sources] (val fs: FileSystem) {
       sys.error(s"SwapFs: filesystem refused to rename $src -> $dst")
   }
 
+  /** Replace `live` with `src` through the aside copy `old`: `live`
+    * → `old`, `src` → `live`, drop `old`. Each step is one rename or
+    * delete, so a crash leaves `live` either old or new (atomic on
+    * rename-capable filesystems), and [[recoverSwap]] heals the one
+    * window where `live` is missing. */
+  def swapIn(src: HPath, live: HPath, old: HPath): Unit = {
+    delete(old)
+    if (exists(live)) rename(live, old)
+    rename(src, live)
+    delete(old)
+  }
+
+  /** Crash recovery for [[swapIn]], run before anything reads `live`:
+    * a leftover `old` means a prior run died inside the swap window.
+    * If `live` is absent the install never happened — rename the old
+    * copy back (its rows must rejoin the next read, or the next
+    * swap's leading delete would destroy the only copy: silent data
+    * loss). If `live` exists the install completed — drop the
+    * leftover. */
+  def recoverSwap(live: HPath, old: HPath): Unit =
+    if (exists(old)) { if (exists(live)) delete(old) else rename(old, live) }
+
+  /** Whole content of a small file (lease token, manifest, index
+    * geometry) as UTF-8. */
+  def readText(p: HPath): String = {
+    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    val in = fs.open(p)
+    try in.readFully(0L, buf) finally in.close()
+    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  /** Create `p` holding `text` (UTF-8); `overwrite = false` is the
+    * create-exclusive form, which fails when `p` exists. */
+  def writeText(p: HPath, text: String, overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
   /** Names of the immediate child directories of `p` (empty when `p`
     * is absent) — partition-directory enumeration for the scoped
     * merge. O(children) metadata calls, no data reads. */
@@ -121,10 +160,7 @@ final class SwapFs private[sources] (val fs: FileSystem) {
           if (readToken(lock).contains(token)) {
             try fs.setTimes(lock, System.currentTimeMillis(), -1)
             catch {
-              case scala.util.control.NonFatal(_) =>
-                val out = fs.create(lock, true)
-                try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                finally out.close()
+              case scala.util.control.NonFatal(_) => writeText(lock, token, overwrite = true)
             }
           } else {
             SwapFs.log.error(s"SwapFs: lease $lock no longer carries this writer's token — " +
@@ -148,22 +184,14 @@ final class SwapFs private[sources] (val fs: FileSystem) {
   }
 
   private def readToken(lock: HPath): Option[String] =
-    try {
-      val st = fs.getFileStatus(lock)
-      val buf = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(lock)
-      try in.readFully(0L, buf) finally in.close()
-      Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try Some(readText(lock)) catch { case scala.util.control.NonFatal(_) => None }
 
   private def tryCreateLease(lock: HPath, token: String): Boolean =
     try {
       // create-exclusive: the overwrite=false form fails when the file
       // exists — the one atomic conflict-detection primitive every
       // Hadoop filesystem exposes
-      val out = fs.create(lock, false)
-      try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeText(lock, token, overwrite = false)
       true
     } catch { case _: java.io.IOException => false }
 
@@ -191,12 +219,8 @@ final class SwapFs private[sources] (val fs: FileSystem) {
 
   private def releaseLease(lock: HPath, token: String, staleMs: Long): Unit =
     try {
-      val st = fs.getFileStatus(lock)
-      val buf = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(lock)
-      try in.readFully(0L, buf) finally in.close()
-      val ageMs = System.currentTimeMillis() - st.getModificationTime
-      if (new String(buf, java.nio.charset.StandardCharsets.UTF_8) != token)
+      val ageMs = System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime
+      if (readText(lock) != token)
         SwapFs.log.warn(s"SwapFs: lease $lock was taken over while held — not deleting " +
           "(this writer's renewal lapsed past the stale threshold; its swap may have raced " +
           "the new holder)")

@@ -240,8 +240,8 @@ object Streams {
     * pins the gate width (shuffle partitions = state-store partitions
     * = 2 — the documented per-gate rationale at each call site) and
     * the scratch-checkpoint conf pair, restoring every prior value on
-    * exit. The pair (r16, measured by [[graft.tools.StreamCfgProbe]]
-    * interleaved A/B — median 4.87→4.24 s on stream_join_views):
+    * exit. The pair (r16 interleaved A/B in one warm JVM, recorded in
+    * OPTIMIZATION_r16.md — median 4.87→4.24 s on stream_join_views):
     *
     *  - `checkpoint.fileChecksum.enabled=false`: Spark 4.1 writes an
     *    integrity-checksum sidecar per checkpoint file. These gates'

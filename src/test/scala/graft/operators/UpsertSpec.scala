@@ -210,13 +210,18 @@ class UpsertSpec extends SparkSpec {
   private def accountedScansWhere(pathMatch: String => Boolean)(
       body: => Unit): Array[(String, Long)] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    // listener events arrive late: a query the test ran just before
+    // `body` can still be queued when the listener registers — count
+    // only queries planned from here on
+    val t0 = System.currentTimeMillis()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           d: Long): Unit =
-        fileScans(qe.executedPlan).foreach { s =>
-          s.relation.location.rootPaths.foreach(rp =>
-            seen.add(rp.toUri.getPath -> s.metrics("numFiles").value))
-        }
+        if (qe.tracker.phases.values.forall(_.startTimeMs >= t0))
+          fileScans(qe.executedPlan).foreach { s =>
+            s.relation.location.rootPaths.foreach(rp =>
+              seen.add(rp.toUri.getPath -> s.metrics("numFiles").value))
+          }
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
@@ -546,6 +551,42 @@ class UpsertSpec extends SparkSpec {
         Seq((50, "d3", 0)).toDF("k", "d", "v"), Seq("k"), "d")
     }
     assert(scans.forall(_._2 == 0), s"compacted index should prune: ${scans.toSeq}")
+  }
+
+  test("a merge's overlapped jobs run under the caller's current job group") {
+    // the bounds fetch and the two index-stage writes run beside the
+    // merge's own thread; a pooled thread would keep the job group that
+    // was current when the pool created it, so a group-B merge after a
+    // group-A one would file those jobs under A (cancelJobGroup misses)
+    val path = Files.createTempDirectory("pmerge-group").toString + "/fact"
+    Upsert.mergePartitionedPath(spark, path,
+      Seq((1, "d1", "a"), (11, "d2", "b")).toDF("k", "d", "v"), Seq("k"), "d")
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    try {
+      sc.setJobGroup("merge-A", "first merge")
+      Upsert.mergePartitionedPath(spark, path, Seq((1, "d1", "A")).toDF("k", "d", "v"), Seq("k"), "d")
+      sc.addSparkListener(listener)
+      sc.setJobGroup("merge-B", "second merge")
+      Upsert.mergePartitionedPath(spark, path, Seq((11, "d2", "B")).toDF("k", "d", "v"), Seq("k"), "d")
+      // listener events arrive in order: once this job's start is seen,
+      // every merge job's start has been delivered
+      sc.setJobGroup("sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+    import scala.jdk.CollectionConverters._
+    val groups = seen.asScala.toSeq.filterNot(_ == "sentinel")
+    assert(groups.nonEmpty && groups.forall(_ == "merge-B"), s"merge jobs by group: $groups")
   }
 
   test("mergePartitionedPath fails loud past the partition budget") {
