@@ -207,8 +207,8 @@ object Upsert {
       source: DataFrame, keys: Seq[String], partCol: String,
       maxPartitions: Int = 4096,
       leaseStaleMs: Long = SwapFs.DefaultLeaseStaleMs): Long =
-    mergeScoped(spark, targetPath, source, keys, partCol, maxPartitions, leaseStaleMs)(
-      new InPlace(_, _, _, _))
+    mergeScoped(new Commit(spark, targetPath, partCol) with InPlace,
+      source, keys, maxPartitions, leaseStaleMs)
 
   /** The partition-scoped MERGE protocol ([[mergeScoped]]) with the
     * MANIFEST commit — the flat-object-store form of
@@ -229,8 +229,8 @@ object Upsert {
       source: DataFrame, keys: Seq[String], partCol: String,
       maxPartitions: Int = 4096,
       leaseStaleMs: Long = SwapFs.DefaultLeaseStaleMs): Long =
-    mergeScoped(spark, targetPath, source, keys, partCol, maxPartitions, leaseStaleMs)(
-      new Manifest(_, _, _, _))
+    mergeScoped(new Commit(spark, targetPath, partCol) with Manifest,
+      source, keys, maxPartitions, leaseStaleMs)
 
   /** Resolve a manifest-committed target to a DataFrame: the highest
     * committed generation's live partitions, partition column
@@ -274,13 +274,12 @@ object Upsert {
     * thread (`ExecutionContext.global`) keeps the copy it took when the
     * pool grew, and `sc.cancelJobGroup` would miss its jobs. */
   private[operators] def overlapped[A, B](a: => A)(b: => B): (A, B) = {
-    val ra = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[A]]()
-    val t = new Thread(() => ra.set(
-      try scala.util.Success(a) catch { case e: Throwable => scala.util.Failure(e) }))
-    t.setDaemon(true)
+    var ra: scala.util.Try[A] = null // published to this thread by the join
+    val t = new Thread(() =>
+      ra = try scala.util.Success(a) catch { case e: Throwable => scala.util.Failure(e) })
     t.start()
     val rb = try b finally t.join()
-    (ra.get.get, rb)
+    (ra.get, rb)
   }
 
   /** ONE bounded job fetching the batch's distinct partition values
@@ -313,11 +312,13 @@ object Upsert {
     (srcPartVals, srcHasNull, srcPartCanon, boundsLocal)
   }
 
-  /** What the two commit strategies of the one partition-scoped MERGE
-    * protocol ([[mergeScoped]]) do differently; everything else is
-    * shared. One instance per merge call, built inside its lease. */
-  private sealed abstract class Commit(val spark: SparkSession, val io: SwapFs,
-      val targetPath: String, val partCol: String) {
+  /** One merge call's target, plus what the two commit strategies of
+    * the one partition-scoped MERGE protocol ([[mergeScoped]]) do
+    * differently — mixed in as [[InPlace]] or [[Manifest]]; everything
+    * else is shared. Building one touches no file. */
+  private sealed abstract class Commit(val spark: SparkSession, val targetPath: String,
+      val partCol: String) {
+    val io: SwapFs = SwapFs.forPath(spark, targetPath)
     val prefix = s"$partCol="
     val tgt: HPath = io.path(targetPath)
     /** API name, plan label and advice for an over-budget batch. */
@@ -339,8 +340,7 @@ object Upsert {
 
   /** In-place commit: each merged partition directory swaps into the
     * target by rename (`d=X` → `d=X.old-pmerge`, tmp → `d=X`). */
-  private final class InPlace(sp: SparkSession, fs: SwapFs, path: String, pc: String)
-      extends Commit(sp, fs, path, pc) {
+  private trait InPlace extends Commit {
     def api = "mergePartitionedPath"; def tag = "pmerge"
     def overBudget = "use mergeIntoPath (full rewrite) for rewrite-everything batches"
 
@@ -376,8 +376,7 @@ object Upsert {
 
   /** Manifest commit: merged partition directories move into a fresh
     * generation `_g<n+1>`, visible through one manifest file. */
-  private final class Manifest(sp: SparkSession, fs: SwapFs, path: String, pc: String)
-      extends Commit(sp, fs, path, pc) {
+  private trait Manifest extends Commit {
     def api = "mergePartitionedManifest"; def tag = "mmerge"
     def overBudget = "rewrite into a fresh generation wholesale instead"
     private var state = ManifestStore.State(0L, Map.empty)
@@ -429,11 +428,9 @@ object Upsert {
     * [[mergePartitionedPath]] and [[mergePartitionedManifest]]: fence,
     * open the target through the commit strategy, then either write it
     * for the first time or merge the batch into it ([[mergeLive]]). */
-  private def mergeScoped(spark: SparkSession, targetPath: String,
-      source: DataFrame, keys: Seq[String], partCol: String, maxPartitions: Int,
-      leaseStaleMs: Long)(strategy: (SparkSession, SwapFs, String, String) => Commit): Long = {
-    val io = SwapFs.forPath(spark, targetPath)
-    val commit = strategy(spark, io, targetPath, partCol)
+  private def mergeScoped(commit: Commit, source: DataFrame, keys: Seq[String],
+      maxPartitions: Int, leaseStaleMs: Long): Long = {
+    import commit.{spark, io, targetPath, partCol}
     require(!keys.contains(partCol),
       s"${commit.api}: partition column $partCol cannot also be a merge key")
     io.withLease(targetPath, leaseStaleMs) {
@@ -485,11 +482,9 @@ object Upsert {
     // the batch-side bounds fetch and the index meta read are
     // independent (source cache vs index parquet) — overlap them
     // (guide §2.6); the srcparts phase print then runs concurrently
-    // with readValid's, so their wall-clocks are not additive.
-    // readValid validates the key index that bounds the probe below:
-    // it only READS partitions whose recorded key ranges overlap the
-    // batch and whose record-level key-hash rows hold one of its keys
-    // — O(touched) I/O instead of O(target)
+    // with readValid's, so their wall-clocks are not additive. The
+    // validated index bounds the probe to partitions whose key ranges
+    // AND key-hash rows admit the batch — O(touched) I/O, not O(target)
     val ((srcPartVals, srcHasNull, srcPartCanon, boundsLocal), validIdx) = overlapped(
       srcPartsAndBounds(spark, srcPK, keys, maxPartitions))(
       timed("readValid")(KeyIdx.readValid(spark, io, targetPath, target.schema,
@@ -524,10 +519,9 @@ object Upsert {
     // O(touched partitions) ≈ O(batch); this gate fixture's batches
     // touch every partition, the worst case, and still win.
     val merged0 = upsertBatch(scoped, src, keys)
-    val merged = if (validIdx.isEmpty) merged0 else {
-      val m = merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      mergedCached = Some(m); m
-    }
+    mergedCached = validIdx.map(_ =>
+      merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val merged = mergedCached.getOrElse(merged0)
     val tmp = io.path(targetPath + ".tmp-pmerge")
     io.delete(tmp)
     val obs = Observation()
@@ -771,9 +765,8 @@ private[operators] object KeyIdx {
     * one meta chunk + a freshly bucketed record base. Chunks make
     * per-merge index maintenance O(1) files and O(affected) bytes;
     * superseded rows accumulate until compaction folds them out
-    * (amortized O(index / MaxChunks) per merge). `var` for spec-scale
-    * fixtures only, like [[RecBucketRows]]. */
-  @volatile private[operators] var MaxChunks: Int = 16
+    * (amortized O(index / MaxChunks) per merge). */
+  val MaxChunks = 16
 
   def markPending(io: SwapFs, targetPath: String): Unit = {
     val marker = io.path(targetPath + "/" + Dir + "/" + PendingName)

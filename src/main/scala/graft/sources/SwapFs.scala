@@ -64,7 +64,7 @@ final class SwapFs private[sources] (val fs: FileSystem) {
     * delete, so a crash leaves `live` either old or new (atomic on
     * rename-capable filesystems), and [[recoverSwap]] heals the one
     * window where `live` is missing. */
-  def swapIn(src: HPath, live: HPath, old: HPath): Unit = {
+  private[graft] def swapIn(src: HPath, live: HPath, old: HPath): Unit = {
     delete(old)
     if (exists(live)) rename(live, old)
     rename(src, live)
@@ -78,12 +78,12 @@ final class SwapFs private[sources] (val fs: FileSystem) {
     * swap's leading delete would destroy the only copy: silent data
     * loss). If `live` exists the install completed — drop the
     * leftover. */
-  def recoverSwap(live: HPath, old: HPath): Unit =
+  private[graft] def recoverSwap(live: HPath, old: HPath): Unit =
     if (exists(old)) { if (exists(live)) delete(old) else rename(old, live) }
 
   /** Whole content of a small file (lease token, manifest, index
     * geometry) as UTF-8. */
-  def readText(p: HPath): String = {
+  private[graft] def readText(p: HPath): String = {
     val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
     val in = fs.open(p)
     try in.readFully(0L, buf) finally in.close()
@@ -92,7 +92,7 @@ final class SwapFs private[sources] (val fs: FileSystem) {
 
   /** Create `p` holding `text` (UTF-8); `overwrite = false` is the
     * create-exclusive form, which fails when `p` exists. */
-  def writeText(p: HPath, text: String, overwrite: Boolean): Unit = {
+  private[graft] def writeText(p: HPath, text: String, overwrite: Boolean): Unit = {
     val out = fs.create(p, overwrite)
     try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()

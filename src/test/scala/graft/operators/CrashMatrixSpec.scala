@@ -234,23 +234,19 @@ class CrashMatrixSpec extends SparkSpec {
 
   test("in-place merge survives a crash at every mutation, index compaction included") {
     val work = LocalFs.scratchDir("crash-prep")
-    val maxChunks = KeyIdx.MaxChunks
-    // a spec-scale ceiling keeps every point's recovery merges cheap
-    KeyIdx.MaxChunks = 2
     try {
       val target = work.resolve("fact")
-      // MaxChunks meta chunks: the swept merge stages and installs a
-      // chunk, which then compacts the index
+      // MaxChunks meta chunks, prepared once for every point: the swept
+      // merge stages and installs one more, which then compacts the index
+      val t0 = System.nanoTime()
       val pre = prepare(InPlace, target,
         init +: (1 until KeyIdx.MaxChunks).map(i => Seq((5, "d3", s"e$i"))): _*)
       val chunks = Files.list(target.resolve("_keyidx"))
       try assert(chunks.iterator().asScala.count(_.toString.endsWith(".parquet")) == KeyIdx.MaxChunks)
       finally chunks.close()
+      info(f"prepared ${KeyIdx.MaxChunks} index chunks in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       sweep(InPlace, target, pre)
-    } finally {
-      KeyIdx.MaxChunks = maxChunks
-      LocalFs.deleteRecursively(work)
-    }
+    } finally LocalFs.deleteRecursively(work)
   }
 
   test("manifest merge survives a crash at every mutation, index rebuild included") {

@@ -89,35 +89,18 @@ class UpsertSpec extends SparkSpec {
     val init = Seq((1, "d1", "a"), (2, "d1", "a2"), (11, "d2", "b"),
       (21, "d3", "c"), (31, "d4", "e")).toDF("k", "d", "v").repartition(1)
     assert(Upsert.mergePartitionedPath(spark, path, init, Seq("k"), "d") == 5)
-    // input-file accounting: capture every scan over the target that
-    // any query during the second merge actually executed
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit =
-        fileScans(qe.executedPlan).foreach { s =>
-          s.relation.location.rootPaths.foreach(rp =>
-            seen.add(rp.toUri.getPath -> s.metrics("numFiles").value))
-        }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    // input-file accounting: every scan over the target that any query
+    // during the second merge actually executed
+    val scans = accountedScans(path) {
       // batch updates one key inside d2's range: the index must prune
       // the probe (and everything else) to that single partition
       val batch = Seq((11, "d2", "B")).toDF("k", "d", "v")
       assert(Upsert.mergePartitionedPath(spark, path, batch, Seq("k"), "d") == 1)
-      // listener events are async — wait for the target scans to land
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      def targetScans = seen.toArray(Array.empty[(String, Long)]).filter(_._1 == path)
-      while (targetScans.length < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      val scans = targetScans
-      assert(scans.nonEmpty, "expected at least one accounted scan over the target")
-      // 4 partition dirs × 1 file: any scan reading >1 file read an
-      // untouched partition
-      assert(scans.forall(_._2 <= 1), s"a merge scan read untouched partitions: $scans")
-    } finally spark.listenerManager.unregister(listener)
+    }
+    assert(scans.nonEmpty, "expected at least one accounted scan over the target")
+    // 4 partition dirs × 1 file: any scan reading >1 file read an
+    // untouched partition
+    assert(scans.forall(_._2 <= 1), s"a merge scan read untouched partitions: ${scans.toSeq}")
     assert(spark.read.parquet(path).select($"k", $"v").as[(Int, String)].collect().toSet ==
       Set((1, "a"), (2, "a2"), (11, "B"), (21, "c"), (31, "e")))
   }
@@ -203,7 +186,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   // shared scan-accounting harness: run `body` with a listener
-  // capturing every file scan over `path`, return (scans, deadlineHit)
+  // capturing every file scan over `path`, return the scans
   private def accountedScans(path: String)(body: => Unit): Array[(String, Long)] =
     accountedScansWhere(_ == path)(body)
 
