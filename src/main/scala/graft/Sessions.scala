@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One session shape for every graft main (and the driver contract):
-  * local[N] with N = SPARK_GRAFT_CPUS (default: all cores, matching
-  * the harness's local[32]), shuffle partitions = N (not Spark's 200 —
+  * local[N] with N = SPARK_GRAFT_CPUS (default: all cores), shuffle
+  * partitions = N (not Spark's 200 —
   * at local scale 200 partitions is pure scheduling overhead; on a
   * real cluster this knob is sized to executor count × cores),
   * UTC session time, nanos-as-long for the events table, and the
@@ -26,10 +26,12 @@ object Sessions {
       // read them as plain TIMESTAMP (UTC session) rather than NTZ so
       // unix_micros / interval arithmetic / window frames all resolve
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the generated-class cache defaults to 100 entries; the catalog
-      // compiles ~600 codegen units per sweep, so at 100 every pass
-      // recompiles everything it evicted (Janino, ~50-200 ms each) —
-      // the dominant source of run-to-run jitter on small-SF benches
+      // the generated-class cache defaults to 100 entries; a warm
+      // catalog pass runs ~2400 whole-stage compilations, so a smaller
+      // cache recompiles what it evicted (Janino, ~50-200 ms each) —
+      // the dominant source of run-to-run jitter on small-SF benches.
+      // 2000 is still below that working set, so LRU cycles it too;
+      // 20000 cut a warm pass to ~300 compilations in one probe
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       // saveAsTable (bucketed layouts) must not litter the launch dir;
       // RAM-backed when available — warehouse tables written by the
@@ -65,8 +67,8 @@ object Sessions {
       // broadcast exchanges collect through the driver and count
       // against maxResultSize; the synthetic decade's 15M-entity dim
       // serializes just past the 1g default (measured: 1055 MiB at
-      // sf100). 4g keeps O(entities) broadcasts viable on the 48–96g
-      // driver this harness runs; a cluster sizes this with driver RAM
+      // sf100). 4g keeps O(entities) broadcasts viable on the 96g
+      // driver the sf100 runs used; a cluster sizes this with driver RAM
       .config("spark.driver.maxResultSize", "4g")
     // probe-side conf overrides (SPARK_GRAFT_EXTRA_CONF="k=v,k=v"):
     // decade probes on a scratch-bounded box need e.g.

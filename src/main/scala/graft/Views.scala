@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The ANSI subset of the oracle catalog is proven to run verbatim
   * through this front-end with results identical to the DataFrame API
-  * queries (SqlFrontEndSpec) — the same SQL text executes on Spark
+  * queries (CatalogSpec) — the same SQL text executes on Spark
   * and DuckDB with hash-equal output.
   */
 object Views {
@@ -132,7 +132,7 @@ object Views {
     * HUGEINT; Spark `aggregate` needs an element-typed zero — a
     * wrong-type zero would be a silent semantics change) and list
     * SUBSCRIPTS (DuckDB `l[i]` is 1-based, Spark 0-based — any oracle
-    * using subscripts must stay excluded; the SqlFrontEndSpec
+    * using subscripts must stay excluded; the CatalogSpec verbatim
     * result-equality gate catches an accidental inclusion; in-bounds
     * extraction spells as `list_slice(l, i, i)` through the slice
     * bridge when the dialect needs it). */

@@ -415,7 +415,7 @@ object StatsOps {
     * global window (the survey's J2 rule).
     *
     * ANSI-portable end to end: this oracle text also runs VERBATIM
-    * through spark.sql (SqlFrontEndSpec). */
+    * through spark.sql (CatalogSpec). */
   def cusumValueShift(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .filter(col("ts").isNotNull && col("value").isNotNull)
@@ -507,7 +507,7 @@ object StatsOps {
     * DuckDB exactly its own `quantile_disc` (no replay: both sides
     * claim the same order statistic, the strongest possible gate for
     * a quantile operator), and since the ANSI spelling parses on
-    * Spark too, SqlFrontEndSpec pins a THIRD independent
+    * Spark too, CatalogSpec pins a THIRD independent
     * implementation (Spark's percentile_disc) to the same answer. */
   def exactQuantilesTotalprice(spark: SparkSession, dir: String): DataFrame = {
     val ord = Tables.orders(spark, dir)
@@ -1223,7 +1223,7 @@ object StatsOps {
     // quantile_disc (same function, ANSI surface), so the exactness
     // gate still runs against DuckDB's OWN rank rule — and the ANSI
     // spelling also parses in Spark, making the oracle verbatim-
-    // portable: SqlFrontEndSpec additionally pins Spark's independent
+    // portable: CatalogSpec additionally pins Spark's independent
     // percentile_disc implementation to the same answer (three
     // implementations of the discrete-quantile rule must now agree).
     "exact_quantiles_totalprice" ->

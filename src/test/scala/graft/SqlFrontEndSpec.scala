@@ -1,37 +1,16 @@
 package graft
 
-/** The SQL front-end contract: the ANSI subset of the oracle catalog
-  * runs VERBATIM through `spark.sql` on the registered views and
-  * produces the identical result the DataFrame API query produces.
-  * Combined with the driver's DuckDB gate (which executes the same
-  * text), these queries are proven to run unmodified on both engines
-  * — the drop-in property a reference user migrating SQL cares about.
-  *
-  * NOTE on the `WindowExec: No Partition Defined` warnings this suite
-  * emits: they come from executing the ORACLE texts (written for
-  * DuckDB, where several replays use global windows) through
-  * `spark.sql` at oracle SFs. The verbatim surface is a correctness
-  * mirror, not a scale path — the engine's own DataFrame plans keep
-  * their windows partition-keyed (CatalogPlanSweepSpec asserts it),
-  * so these warnings need no further investigation. */
+/** The SQL front end: the harness tables as views, native kernels
+  * callable from SQL, and `ansiPortable`, the oracle subset that
+  * `CatalogSpec`'s verbatim test runs through `spark.sql`. */
 class SqlFrontEndSpec extends SparkSpec {
   import SqlFrontEndSpec.ansiPortable
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("the verbatim-portable set holds at least 164 entries") {
+  test("the verbatim-portable set holds at least 165 entries") {
     assert(ansiPortable.size >= 165, s"got ${ansiPortable.size}")
     assert(ansiPortable.distinct.size == ansiPortable.size)
-  }
-
-  test("ANSI oracle SQL runs verbatim via spark.sql with DataFrame-identical results") {
-    Views.register(spark, dir)
-    ansiPortable.foreach { name =>
-      val viaSql = spark.sql(SparkEntry.oracleSql(name)).toJSON.collect().toSeq
-      val viaApi = SparkEntry.queries(name)(spark, dir).toJSON.collect().toSeq
-      assert(viaSql == viaApi, s"$name: SQL text and DataFrame API disagree")
-      assert(viaSql.nonEmpty, name)
-    }
   }
 
   test("native kernels are callable from SQL strings on the views") {

@@ -1,7 +1,7 @@
 package graft
 
 /** Direct contract tests for the r12 compat bridges — the catalog
-  * entries exercise the happy paths through SqlFrontEndSpec, but the
+  * entries exercise the happy paths through CatalogSpec, but the
   * LOUD-FAILURE contracts (unsupported strftime directive, non-'{:,}'
   * format spec) are reachable only by a user's own SQL, so they get
   * pinned here: a bridge must either match DuckDB's semantics exactly

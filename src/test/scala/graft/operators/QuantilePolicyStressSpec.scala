@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * holds every distinct (value, count) pair and merges them all into
   * one final buffer — O(distinct) state on a single task. Until now
   * that was a scaladoc argument plus a plan screen
-  * (CatalogPlanSweepSpec). This spec turns it into numbers: on a
+  * (CatalogSpec). This spec turns it into numbers: on a
   * ~unique-valued column, the bytes `percentile`'s partial buffers
   * push through the exchange GROW LINEARLY with the data (the state
   * IS the data), while [[HistQuantiles]]' grid aggregate ships a
