@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.sources.{ManifestStore, SwapFs}
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
@@ -134,22 +134,21 @@ object Upsert {
     * protocol ([[mergeScoped]]) with the IN-PLACE commit: merged
     * partitions swap into the target by directory rename
     * ([[mergePartitionedManifest]] is the same protocol with a
-    * manifest commit). Affected set = partitions holding
-    * source rows ∪ target partitions holding MATCHED keys (found with
-    * one column-pruned semi probe — the scan reads the key columns
-    * only; partition values come from directory names). Untouched
+    * manifest commit). Affected set = partitions holding source rows
+    * ∪ target partitions holding MATCHED keys, answered by a key index
+    * (`_keyidx` inside the target — [[KeyIdx]]): per-partition min/max
+    * meta rows for every key column, plus a RECORD-LEVEL `(key-hash,
+    * partition)` side kept as per-merge chunks and compacted into a
+    * hash-bucketed base. The batch's key ranges and hashes are tested
+    * against it; only when the index cannot answer exactly (missing
+    * or invalid, a batch past [[KeyIdx.BatchProbeMax]] keys, a torn
+    * record base) does a column-pruned semi probe of the index's
+    * range candidates find the matched partitions. Untouched
     * partitions' files are never rewritten (byte-identical after the
     * merge — UpsertSpec pins this), so a date-partitioned 100 TB fact
     * pays O(touched partitions) per batch, not O(target).
     *
-    * The matched-key probe is itself BOUNDED by a key index
-    * (`_keyidx` inside the target — [[KeyIdx]]): per-partition
-    * min/max meta rows for every key column, plus a RECORD-LEVEL
-    * `(key-hash, partition)` side maintained as per-merge chunks and
-    * compacted into a hash-bucketed base. Before the semi probe runs,
-    * the batch's key ranges and key hashes are tested against the
-    * index and the probe scan is partition-pruned to the candidates.
-    * Range intersection bounds the probe for range-clustered keys
+    * Range intersection bounds the answer for range-clustered keys
     * (sequential ids, dates); the record lookup bounds it for
     * HASH-DISTRIBUTED keys — the reference's own surrogate-key type
     * (sha256 `observation_sk`,
@@ -157,14 +156,15 @@ object Upsert {
     * partition's [min,max] spans the whole key space and range
     * pruning alone degrades to the full O(target) scan. With the
     * record index, a batch touching one partition of a 100 TB fact
-    * reads one partition's key columns whichever key shape it has —
-    * at ANY per-partition cardinality (the r14 Bloom sidecars
-    * saturated past ~200k tuples/partition and silently restored the
-    * O(target) probe); the lookup itself reads O(batch) bucket files,
-    * not O(partitions) (UpsertSpec pins this with scan-metric
-    * accounting for BOTH key shapes and at beyond-Bloom-cap
-    * cardinality; ProbeScaling measures both curves flat in the
-    * untouched-partition count).
+    * reads one partition's data whichever key shape it has — at ANY
+    * per-partition cardinality (the r14 Bloom sidecars saturated past
+    * ~200k tuples/partition and silently restored the O(target)
+    * probe); the lookup itself reads O(batch) bucket files, not
+    * O(partitions) (UpsertSpec pins this with scan-metric accounting
+    * for BOTH key shapes and at beyond-Bloom-cap cardinality;
+    * ProbeScaling measures both curves flat in the untouched-partition
+    * count). A key-hash collision only adds a partition, rewritten
+    * unchanged.
     *
     * Index soundness is crash-first: a `_PENDING` marker is created
     * inside the index before any data-directory swap and removed only
@@ -181,8 +181,8 @@ object Upsert {
     *
     * Semantics are identical to [[mergeIntoPath]]: matched keys take
     * the source row wholesale — INCLUDING a changed partition value
-    * (the old row's partition is in the affected set via the semi
-    * probe, so the row MOVES; a scoped-to-source-partitions-only
+    * (the old row's partition holds a matched key, so it is in the
+    * affected set and the row MOVES; a scoped-to-source-partitions-only
     * design would leave a stale duplicate behind). A partition whose
     * rows ALL move away is deleted. Affected partition values are a
     * bounded driver fetch capped at `maxPartitions` (loud failure —
@@ -194,7 +194,7 @@ object Upsert {
     * mixed; re-running the same merge is idempotent and heals —
     * EXPLICITLY: entry first restores any `*.old-pmerge` leftover
     * whose live directory is missing (and drops leftovers whose
-    * install completed), so crashed-partition rows rejoin the probe
+    * install completed), so crashed-partition rows rejoin the target
     * (the `_PENDING` marker guarantees no index pruning can run until
     * the index is rebuilt; UpsertSpec pins both windows, and
     * CrashMatrixSpec crashes the protocol at every filesystem
@@ -214,7 +214,7 @@ object Upsert {
     * MANIFEST commit — the flat-object-store form of
     * [[mergePartitionedPath]] ([[graft.sources.ManifestStore]] for the
     * commit protocol and why it exists). Identical MERGE semantics,
-    * probe pruning (the same `_keyidx`, validated against the
+    * affected-set answer (the same `_keyidx`, validated against the
     * manifest's live-partition list instead of directory names),
     * partition budget, fencing, and row-count return; different
     * physical install: affected partitions land in a fresh generation
@@ -247,23 +247,21 @@ object Upsert {
   private def manifestFrame(spark: SparkSession, targetPath: String,
       state: ManifestStore.State): DataFrame = {
     // one read per generation group (basePath recovers the partition
-    // column from the directory names), unioned with the head group's
-    // schema as the alignment target — partition-column TYPE INFERENCE
-    // runs per group and may disagree across generations (a group
-    // holding only the null partition infers differently), so later
-    // groups cast to the head's types. Groups sort by NUMERIC
-    // generation, newest first, so the cast anchor is deterministically
-    // the highest generation's schema (a lexicographic sort would rank
-    // '_g10' before '_g2' and let the anchor flip between merges)
+    // column from the directory names). Only the first group's schema
+    // is inferred and every other group is read with it: no further
+    // inference job, one set of types. The first group is the newest
+    // holding a non-null partition value — a null-only group infers the
+    // partition column as VOID, which would null every other group's
+    // values. NUMERIC generation order ('_g10' sorts after '_g2')
+    val nullOnly = (rels: Iterable[String]) =>
+      rels.forall(_.endsWith("=" + ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
     val byGen = state.parts.values.groupBy(_.takeWhile(_ != '/')).toSeq
-      .sortBy { case (gen, _) => -gen.drop(2).toLong }
-    val frames = byGen.map { case (gen, rels) =>
-      spark.read.option("basePath", s"$targetPath/$gen")
-        .parquet(rels.map(r => s"$targetPath/$r").toSeq: _*)
-    }
-    val head = frames.head
-    frames.tail.foldLeft(head) { (acc, f) =>
-      acc.unionByName(f.select(head.schema.map(fd => col(fd.name).cast(fd.dataType)): _*))
+      .sortBy { case (gen, rels) => (nullOnly(rels), -gen.drop(2).toLong) }
+    def read(r: DataFrameReader, gen: String, rels: Iterable[String]): DataFrame =
+      r.option("basePath", s"$targetPath/$gen").parquet(rels.map(r => s"$targetPath/$r").toSeq: _*)
+    val head = read(spark.read, byGen.head._1, byGen.head._2)
+    byGen.tail.foldLeft(head) { case (acc, (gen, rels)) =>
+      acc.unionByName(read(spark.read.schema(head.schema), gen, rels))
     }
   }
 
@@ -283,33 +281,24 @@ object Upsert {
   }
 
   /** ONE bounded job fetching the batch's distinct partition values
-    * AND its per-partition key bounds (the r14 form paid two driver
-    * jobs: a distinct-p collect plus a separate global min/max
-    * aggregate). Bounded driver fetch: a batch accidentally keyed on
-    * a high-cardinality partition column must not materialize every
-    * distinct value before the caller's loud budget failure fires —
-    * the truncated set alone already exceeds maxPartitions. Global
-    * bounds fold from the per-partition rows through a LOCAL relation
-    * (min-of-mins / max-of-maxes — associative, so the fold is
-    * exact), keeping every type comparison inside Spark expressions. */
-  private def srcPartsAndBounds(spark: SparkSession, srcPK: DataFrame,
-      keys: Seq[String], maxPartitions: Int)
-      : (Array[String], Boolean, Set[String], DataFrame) = {
-    val pbAggs = keys.flatMap(k =>
-      Seq(min(col(k)).as(s"bmin_$k"), max(col(k)).as(s"bmax_$k")))
-    val srcPartDf = srcPK.groupBy(col("__graft_p")).agg(pbAggs.head, pbAggs.tail: _*)
-      .limit(maxPartitions + 1)
-    val srcPartRows = timed("srcparts")(srcPartDf.collect())
-    val srcHasNull = srcPartRows.exists(_.isNullAt(0))
-    val srcPartVals = srcPartRows.filterNot(_.isNullAt(0)).map(_.getString(0))
-    val srcPartCanon = srcPartVals.toSet ++
-      (if (srcHasNull) Set(KeyIdx.NullPart) else Set.empty)
-    val folds = keys.map(k => min(col(s"bmin_$k")).as(s"bmin_$k")) ++
-      keys.map(k => max(col(s"bmax_$k")).as(s"bmax_$k"))
-    val boundsLocal = spark.createDataFrame(
-        java.util.Arrays.asList(srcPartRows: _*), srcPartDf.schema)
-      .agg(folds.head, folds.tail: _*)
-    (srcPartVals, srcHasNull, srcPartCanon, boundsLocal)
+    * (canonical, [[KeyIdx.NullPart]] for null) AND its global key
+    * bounds: a rollup over the partition value whose grand-total row
+    * (`grouping_id()` 1) carries each key's min and max over the whole
+    * batch (`bmin_<k>`/`bmax_<k>`). Bounded driver fetch: a batch
+    * accidentally keyed on a high-cardinality partition column must
+    * not materialize every distinct value before the caller's loud
+    * budget failure fires. When the limit cuts, at least
+    * maxPartitions + 1 partition rows came back, so no bounds row means
+    * an empty batch or one already over budget. */
+  private def srcPartsAndBounds(srcPK: DataFrame, keys: Seq[String], maxPartitions: Int)
+      : (Set[String], Option[Row]) = {
+    val aggs = keys.flatMap(k => Seq(min(col(k)).as(s"bmin_$k"), max(col(k)).as(s"bmax_$k"))) :+
+      (grouping_id() === 1).as("__total")
+    val rows = timed("srcparts")(srcPK.rollup(col("__graft_p")).agg(aggs.head, aggs.tail: _*)
+      .limit(maxPartitions + 2).collect())
+    val (total, perPart) = rows.partition(_.getAs[Boolean]("__total"))
+    (perPart.map(r => if (r.isNullAt(0)) KeyIdx.NullPart else r.getString(0)).toSet,
+      total.headOption)
   }
 
   /** One merge call's target, plus what the two commit strategies of
@@ -327,9 +316,9 @@ object Upsert {
       * anything reads the target: its live frame and partition
       * directory names, or None on first use. */
     def open(): Option[(DataFrame, Set[String])]
-    /** Run the first write (given its directory) and commit it;
-      * returns the directory written. */
-    def writeFirst(write: String => Unit): String
+    /** Run the first write (given its directory), commit it, and read
+      * the written rows back with `schema`. */
+    def writeFirst(write: String => Unit, schema: StructType): DataFrame
     /** Install the merged partition directories `written` from `tmp`,
       * drop the `emptied` ones; returns the new live names. */
     def install(tmp: HPath, written: Set[String], emptied: Set[String]): Set[String]
@@ -354,14 +343,16 @@ object Upsert {
       // drop each partition's swap leftover `d=X.old-pmerge`
       // ([[SwapFs.recoverSwap]]). The prior run's `_PENDING` marker is
       // still in place (it is only removed after a completed post-swap
-      // index rewrite), so no stale index row can prune the restored
-      // rows out of the probe.
+      // index rewrite), so no stale index row can leave the restored
+      // rows out of the affected set.
       for (name <- io.listDirNames(tgt) if name.endsWith(".old-pmerge"))
         io.recoverSwap(new HPath(tgt, name.stripSuffix(".old-pmerge")), new HPath(tgt, name))
       Some((spark.read.parquet(targetPath), io.listDirNames(tgt)))
     }
 
-    def writeFirst(write: String => Unit): String = { write(targetPath); targetPath }
+    def writeFirst(write: String => Unit, schema: StructType): DataFrame = {
+      write(targetPath); committed(schema)
+    }
 
     def install(tmp: HPath, written: Set[String], emptied: Set[String]): Set[String] = {
       for (name <- written)
@@ -391,14 +382,17 @@ object Upsert {
       }
     }
 
-    def writeFirst(write: String => Unit): String = {
+    def writeFirst(write: String => Unit, schema: StructType): DataFrame = {
       val gen0 = s"$targetPath/_g0"
       io.delete(io.path(gen0)) // stale leftover from a crashed first write
       write(gen0)
       val parts = io.listDirNames(io.path(gen0)).filter(_.startsWith(prefix))
       ManifestStore.commit(io, targetPath,
         ManifestStore.State(0L, parts.map(n => n -> s"_g0/$n").toMap))
-      gen0
+      // by partition directory: Spark ignores (with a warning) a read of
+      // the `_`-prefixed gen0 itself
+      val r = spark.read.schema(schema).option("basePath", gen0)
+      if (parts.isEmpty) r.parquet(gen0) else r.parquet(parts.map(n => s"$gen0/$n").toSeq: _*)
     }
 
     def install(tmp: HPath, written: Set[String], emptied: Set[String]): Set[String] = {
@@ -439,16 +433,15 @@ object Upsert {
           mergeLive(commit, target, liveNames, source, keys, maxPartitions)
         case None =>
           val obs0 = Observation()
-          val dir = commit.writeFirst(clusterByPart(
+          val written = commit.writeFirst(clusterByPart(
             source.observe(obs0, count(lit(1)).as("n")), partCol)
-            .write.mode("overwrite").partitionBy(partCol).parquet(_))
+            .write.mode("overwrite").partitionBy(partCol).parquet(_), stringPart(source.schema, partCol))
           // index from the WRITTEN layout, not a second execution of the
           // caller's source plan (which may be an arbitrarily expensive
           // upstream job): a column-pruned read-back of the fresh parquet
           // yields the same per-partition stats for one metadata-cheap
           // scan — the merge path's own tmp-read pattern
-          KeyIdx.rebuild(spark, io, targetPath,
-            spark.read.schema(stringPart(source.schema, partCol)).parquet(dir), partCol, keys)
+          KeyIdx.rebuild(spark, io, targetPath, written, partCol, keys)
           obs0.get("n").asInstanceOf[Long]
       }
     }
@@ -462,62 +455,58 @@ object Upsert {
   private def mergeLive(commit: Commit, target: DataFrame, liveNames: Set[String],
       source: DataFrame, keys: Seq[String], maxPartitions: Int): Long = {
     import commit.{spark, io, targetPath, partCol, prefix}
-    // The source batch is consulted by FOUR independent jobs per merge
-    // (thin-frame build, anti-join probe side, union side of the
-    // merged write — and the caller's plan behind it is often a full
-    // dedupe over an upstream fact). Persist the BATCH (O(batch) rows
-    // — the small side of an incremental merge by definition;
-    // MEMORY_AND_DISK spills, never OOMs) so that plan executes once
-    // per merge, not once per consultation.
+    // The source batch is consulted by several jobs per merge (bounds
+    // rollup, key-hash fetch, both sides of the merged write — and the
+    // caller's plan behind it is often a full dedupe over an upstream
+    // fact). Persist the BATCH (O(batch) rows; MEMORY_AND_DISK spills,
+    // never OOMs) so that plan executes once per merge.
     val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Thin (partition, keys) projection of the persisted batch. NO
     // distinct / persist of its own (the r14 form paid a full shuffle
     // to dedupe it): every consumer — the bounds rollup, the hash
-    // fetch (distinct inside), the semi join — is duplicate-
+    // fetch (distinct inside), the fallback semi join — is duplicate-
     // insensitive, so the projection just narrows the cached batch.
     val srcPK = src.select(col(partCol).cast("string").as("__graft_p") +: keys.map(col): _*)
     var mergedCached: Option[DataFrame] = None
     try {
     val srcKeys = srcPK.select(keys.map(col): _*)
-    // the batch-side bounds fetch and the index meta read are
-    // independent (source cache vs index parquet) — overlap them
-    // (guide §2.6); the srcparts phase print then runs concurrently
-    // with readValid's, so their wall-clocks are not additive. The
-    // validated index bounds the probe to partitions whose key ranges
-    // AND key-hash rows admit the batch — O(touched) I/O, not O(target)
-    val ((srcPartVals, srcHasNull, srcPartCanon, boundsLocal), validIdx) = overlapped(
-      srcPartsAndBounds(spark, srcPK, keys, maxPartitions))(
+    // the bounds fetch (source cache) and the index meta read overlap
+    // (guide §2.6), so their phase prints are not additive
+    val ((srcParts, bounds), validIdx) = overlapped(
+      srcPartsAndBounds(srcPK, keys, maxPartitions))(
       timed("readValid")(KeyIdx.readValid(spark, io, targetPath, target.schema,
         liveNames, prefix, partCol, keys)))
-    val probed = validIdx match {
-      case Some(idx) =>
-        val cand = timed("candidates")(KeyIdx.candidates(spark, io, targetPath, idx,
-          srcKeys, boundsLocal, srcPartCanon, target.schema, keys))
-        val hasDefault = cand.contains(KeyIdx.NullPart)
-        val vals = cand.filterNot(_ == KeyIdx.NullPart)
-        val inCand = col(partCol).cast("string").isin(vals.toIndexedSeq: _*)
-        target.filter(if (hasDefault) inCand || col(partCol).isNull else inCand)
-      case None => target
+    // no rows, no change (and a write of nothing observes no row count)
+    if (srcParts.isEmpty) return 0L
+    def inParts(ps: Set[String]): Column = { // canonical partition values
+      val in = col(partCol).cast("string").isin(ps.filterNot(_ == KeyIdx.NullPart).toSeq.sorted: _*)
+      if (ps(KeyIdx.NullPart)) in || col(partCol).isNull else in
     }
-    val hitRows = timed("affected")(probed.join(srcKeys, keys, "left_semi")
-      .select(col(partCol).cast("string").as("p")).distinct()
-      .limit(maxPartitions + 1).collect())
-    val hasNull = srcHasNull || hitRows.exists(_.isNullAt(0))
-    val parts = (srcPartVals ++ hitRows.filterNot(_.isNullAt(0)).map(_.getString(0))).distinct
-    require(parts.length + (if (hasNull) 1 else 0) <= maxPartitions,
+    // the validated index answers which target partitions hold a batch
+    // key, O(touched) I/O; only when it cannot answer exactly does a
+    // semi probe of its candidates (or of the whole target) find them
+    val cand = validIdx.map(idx => timed("candidates")(KeyIdx.candidates(spark, io,
+      targetPath, idx, srcKeys, bounds, srcParts, target.schema, keys)))
+    val hits = cand match {
+      case Some((ps, true)) => ps
+      case _ =>
+        val probed = cand.fold(target) { case (ps, _) => target.filter(inParts(ps.toSet)) }
+        timed("affected")(probed.join(srcKeys, keys, "left_semi")
+          .select(KeyIdx.canonicalP(partCol)).distinct()
+          .limit(maxPartitions + 1).collect()).map(_.getString(0)).toSeq
+    }
+    val affected = srcParts ++ hits
+    require(affected.size <= maxPartitions,
       s"${commit.api}: batch touches more than $maxPartitions partitions " +
         s"of $targetPath — ${commit.overBudget}")
-    val inParts = col(partCol).cast("string").isin(parts.toIndexedSeq: _*)
-    val scoped = target.filter(if (hasNull) inParts || col(partCol).isNull else inParts)
+    val scoped = target.filter(inParts(affected))
     // When a valid index will be staged below, persist the merged
     // frame: the stage's two jobs (meta stats + record rows) then
     // scan the cache the write job populates instead of re-reading
     // the just-written tmp parquet (guide §1.2 step 1) — measured
-    // best-of-3 at sf0.1: ~1 s/gate faster than the tmp re-read form
-    // even with the stage jobs already overlapped. MEMORY_AND_DISK,
-    // unpersisted in the finally. At true incremental scale merged is
-    // O(touched partitions) ≈ O(batch); this gate fixture's batches
-    // touch every partition, the worst case, and still win.
+    // best-of-3 at sf0.1: ~1 s/gate faster than the tmp re-read form.
+    // MEMORY_AND_DISK, unpersisted in the finally; at incremental
+    // scale merged is O(touched partitions) ≈ O(batch).
     val merged0 = upsertBatch(scoped, src, keys)
     mergedCached = validIdx.map(_ =>
       merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -552,8 +541,7 @@ object Upsert {
     // an affected partition ABSENT from the merged output lost every
     // row (all its keys moved to other partitions) — the install drops
     // it, or the stale rows would duplicate their moved selves
-    val affectedNames = parts.map(v => prefix + ExternalCatalogUtils.escapePathName(v)).toSet ++
-      (if (hasNull) Set(prefix + ExternalCatalogUtils.DEFAULT_PARTITION_NAME) else Set.empty[String])
+    val affectedNames = affected.map(v => prefix + ExternalCatalogUtils.escapePathName(v))
     val newLive = commit.install(tmp, written, affectedNames -- written)
     // post-install index rewrite: install the staged exact rows (and
     // drop rows for deleted partitions), or rebuild from scratch when
@@ -632,8 +620,9 @@ object Upsert {
   * outside the failure model — external writers drop the whole
   * `_keyidx` (the documented contract, e.g.
   * [[graft.sources.LayerWriter.overwriteBatchPartitions]]); crash
-  * windows are covered by the `_PENDING` marker, and a missing
-  * `_rec/` side merely skips refinement (over-inclusive, sound).
+  * windows are covered by the `_PENDING` marker; a missing `_rec/`
+  * side invalidates the index, and an unreadable base geometry sends
+  * the merge to the semi probe (over-inclusive, sound).
   */
 private[operators] object KeyIdx {
 
@@ -673,7 +662,7 @@ private[operators] object KeyIdx {
 
   private def pName(partCol: String) = s"p_$partCol"
 
-  private def canonicalP(partCol: String): Column =
+  private[operators] def canonicalP(partCol: String): Column =
     coalesce(col(partCol).cast("string"), lit(NullPart))
 
   private def expectedCols(partCol: String, keys: Seq[String]): Seq[String] =
@@ -768,6 +757,14 @@ private[operators] object KeyIdx {
     * (amortized O(index / MaxChunks) per merge). */
   val MaxChunks = 16
 
+  /** The live meta chunk files (`c*.parquet` directly in [[Dir]]), for
+    * a read by file name: Spark ignores `_`-prefixed paths, so reading
+    * the [[Dir]] directory itself logs an all-paths-ignored warning. */
+  private def metaChunks(io: SwapFs, live: HPath): Seq[String] =
+    io.fs.listStatus(live).iterator.map(_.getPath)
+      .filter(p => p.getName.startsWith("c") && p.getName.endsWith(".parquet"))
+      .map(_.toString).toSeq
+
   def markPending(io: SwapFs, targetPath: String): Unit = {
     val marker = io.path(targetPath + "/" + Dir + "/" + PendingName)
     // presence flag only — content is never read, so a torn create
@@ -821,9 +818,9 @@ private[operators] object KeyIdx {
     * sides are compacted: meta back to one chunk, record rows into a
     * freshly bucketed base sized by the surviving `nk` total
     * (amortized O(index/MaxChunks) per merge). Rows for partitions
-    * the merge deleted simply stop being refreshed: a stale winner
-    * for a nonexistent partition is an inert phantom candidate
-    * (over-inclusive, prune-safe) that the next compaction drops. */
+    * the merge deleted simply stop being refreshed: [[readValid]]
+    * drops a stale winner for a nonexistent partition, and the next
+    * compaction deletes it. */
   def install(spark: SparkSession, io: SwapFs, targetPath: String, stagedPath: HPath,
       partCol: String, ver: Long, liveDirNames: Set[String], prefix: String): Unit = {
     val live = io.path(targetPath + "/" + Dir)
@@ -832,8 +829,8 @@ private[operators] object KeyIdx {
     moveParquet(io, new HPath(stagedPath, "meta"))(i => new HPath(live, s"c$ver-$i.parquet"))
     moveParquet(io, new HPath(stagedPath, "rec"))(j => new HPath(recLive, s"r$ver-$j.parquet"))
     io.delete(stagedPath)
-    val chunks = io.fs.listStatus(live).count(_.getPath.getName.endsWith(".parquet"))
-    if (chunks > MaxChunks) compact(spark, io, targetPath, partCol, liveDirNames, prefix)
+    if (metaChunks(io, live).length > MaxChunks)
+      compact(spark, io, targetPath, partCol, liveDirNames, prefix)
   }
 
   /** Compact both index sides: meta winners (live partitions only)
@@ -846,7 +843,7 @@ private[operators] object KeyIdx {
   private def compact(spark: SparkSession, io: SwapFs, targetPath: String,
       partCol: String, liveDirNames: Set[String], prefix: String): Unit = {
     val pn = pName(partCol)
-    val winners = spark.read.parquet(io.path(targetPath + "/" + Dir).toString)
+    val winners = spark.read.parquet(metaChunks(io, io.path(targetPath + "/" + Dir)): _*)
       .filter(col(pn).isin(liveValues(liveDirNames, prefix).toSeq: _*))
       .withColumn("__rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col(pn))
@@ -911,31 +908,33 @@ private[operators] object KeyIdx {
       stats(df, partCol, keys, df.schema).withColumn("ver", lit(0L)), pName(partCol), "c0-",
       io.delete(_))(_ => Some(records(df, partCol, keys, df.schema).withColumn("ver", lit(0L))))
 
-  /** A validated index: its WINNER meta frame (max-ver row per
+  /** A validated index: its WINNER meta frame (max-ver row per live
     * partition), the winner version per partition (record-row
     * liveness filter), and the version the next chunk should carry. */
   final case class Valid(stats: DataFrame, winnerVers: Map[String, Long], nextVer: Long)
 
   /** Read the index, validating it against reality before trusting it
-    * for pruning: no pending marker, the exact column set this writer
-    * produces (key-NAME-bound), the binding signature matching the
-    * CURRENT merge definition and target key types, and a meta row
-    * for every live partition directory (extra rows for since-deleted
-    * partitions are fine — over-inclusion never breaks pruning
-    * soundness). Any doubt → None → the caller full-scans and
-    * rebuilds. A v2 (Bloom-sidecar) index fails the column check here
-    * and is rebuilt as v3 on the next merge — the upgrade path. */
+    * for pruning: no pending marker, a record side, the exact column
+    * set this writer produces (key-NAME-bound), the binding signature
+    * matching the CURRENT merge definition and target key types, and a
+    * meta row for every live partition directory (rows for
+    * since-deleted partitions are dropped). Any doubt → None → the
+    * caller full-scans and rebuilds. A v2 (Bloom-sidecar) index fails
+    * the column check and is rebuilt as v3 — the upgrade path. */
   def readValid(spark: SparkSession, io: SwapFs, targetPath: String,
       targetSchema: StructType, liveDirNames: Set[String], prefix: String,
       partCol: String, keys: Seq[String]): Option[Valid] = {
     val live = io.path(targetPath + "/" + Dir)
     if (!io.exists(live)) return None
-    if (io.exists(new HPath(live, PendingName))) return None
+    // no record side: an install would recreate it with only its rows
+    if (io.exists(new HPath(live, PendingName)) || !io.exists(new HPath(live, RecDir))) return None
     val pn = pName(partCol)
     val expected = expectedCols(partCol, keys)
     val statsRaw =
       try {
-        val df = spark.read.parquet(live.toString)
+        val chunks = metaChunks(io, live)
+        if (chunks.isEmpty) return None
+        val df = spark.read.parquet(chunks: _*)
         if (df.columns.sorted.toSeq != expected.sorted) return None
         df.select(expected.map(col): _*)
       } catch { case scala.util.control.NonFatal(_) => return None }
@@ -946,11 +945,7 @@ private[operators] object KeyIdx {
     // ONE bounded job fetches the whole meta side (<= partitions x
     // chunks small rows); every later consultation — signature,
     // versioning, coverage, and the candidates range phase — runs
-    // over the collected rows / a LOCAL relation, so a merge pays
-    // exactly one Spark job and one parquet read for its meta index
-    // (the prior form re-read the meta parquet once more per merge
-    // for the range phase; per-merge fixed latency is paid three
-    // times per incremental gate — every collapsed job shows)
+    // over the collected rows / a LOCAL relation
     val pnIdx = statsRaw.columns.indexOf(pn)
     val sigIdx = statsRaw.columns.indexOf("sig")
     val verIdx = statsRaw.columns.indexOf("ver")
@@ -958,14 +953,16 @@ private[operators] object KeyIdx {
     if (metaRows.isEmpty) return None
     val sigs = metaRows.map(_.getString(sigIdx)).distinct
     if (sigs.length != 1 || sigs(0) != sigFor(partCol, keys, targetSchema)) return None
-    // winner per partition = its max-ver row (later chunks supersede)
-    val winnerVer = metaRows.groupBy(_.getString(pnIdx))
+    // winner per LIVE partition = its max-ver row (later chunks
+    // supersede); a partition a merge emptied keeps its last meta row
+    // until compaction and must not come back as a candidate
+    val liveVals = liveValues(liveDirNames, prefix)
+    val winnerVer = metaRows.groupBy(_.getString(pnIdx)).filter(kv => liveVals(kv._1))
       .map { case (pv, rs) => pv -> rs.map(_.getLong(verIdx)).max }
-    if (!liveValues(liveDirNames, prefix).forall(winnerVer.contains)) return None
+    if (!liveVals.forall(winnerVer.contains)) return None
     val winnerRows = metaRows.filter(r =>
-      winnerVer(r.getString(pnIdx)) == r.getLong(verIdx))
-    // LOCAL relation: the candidates range phase scans these few rows
-    // in-process instead of re-reading the meta parquet
+      winnerVer.get(r.getString(pnIdx)).contains(r.getLong(verIdx)))
+    // LOCAL relation: the candidates range phase filters it in-process
     val winners = spark.createDataFrame(
       java.util.Arrays.asList(winnerRows: _*), statsRaw.schema)
     Some(Valid(winners, winnerVer, metaRows.map(_.getLong(verIdx)).max + 1))
@@ -1007,63 +1004,66 @@ private[operators] object KeyIdx {
     else Some(spark.read.schema(recSchema).parquet(all: _*))
   }
 
-  /** Candidate partitions for the batch: range intersection AND (when
-    * the batch's distinct key-tuple count fits [[BatchProbeMax]]) an
-    * exact record-membership test — which target partitions actually
-    * HOLD one of the batch's key hashes. Returns canonical
-    * partition-value strings ([[NullPart]] for the null partition).
-    * The record pass is the piece that keeps the probe O(touched) for
-    * hash-distributed keys, where every partition survives range
-    * intersection — and its I/O is O(batch) bucket files plus the
-    * recent un-compacted chunks, never O(partitions), however large
-    * each partition's key set is. */
+  /** Target partitions that may hold one of the batch's keys: range
+    * intersection AND (when the batch's distinct key-tuple count fits
+    * [[BatchProbeMax]]) a record-membership test of the batch's key
+    * hashes. Returns canonical partition values ([[NullPart]] for
+    * null) and whether they are EXACT — the record pass ran, no
+    * partition outside the batch's own `srcParts` survived the range
+    * test, or the batch has no non-null key — so the caller needs no
+    * probe (record rows are exact per live `(p, ver)` winner; a hash
+    * collision only adds a partition). The record pass is the piece that keeps the answer
+    * O(touched) for hash-distributed keys, where every partition
+    * survives range intersection — and its I/O is O(batch) bucket
+    * files plus the recent un-compacted chunks, never O(partitions),
+    * however large each partition's key set is. */
   def candidates(spark: SparkSession, io: SwapFs, targetPath: String, idx: Valid,
-      srcKeys: DataFrame, bounds: DataFrame, srcPartVals: Set[String],
-      targetSchema: StructType, keys: Seq[String]): Seq[String] = {
+      srcKeys: DataFrame, bounds: Option[Row], srcParts: Set[String],
+      targetSchema: StructType, keys: Seq[String]): (Seq[String], Boolean) = {
     val pn = idx.stats.columns.head
-    // `bounds`: 1-row frame of the batch's global key bounds
-    // (bmin_<k>/bmax_<k>), supplied by the caller from its one-job
-    // partition/bounds fetch — both sides of the range phase are now
-    // LOCAL relations, so phase 1 costs one in-process job, zero I/O
-    val overlap = keys.map { k =>
-      col(s"max_$k") >= col(s"bmin_$k") && col(s"min_$k") <= col(s"bmax_$k")
-    }.reduce(_ && _)
-    // phase 1 — ranges over the winner meta rows (tiny frame)
-    val ranged = idx.stats
-      .select(col(pn) +: keys.flatMap(k => Seq(col(s"min_$k"), col(s"max_$k"))): _*)
-      .crossJoin(broadcast(bounds)).filter(overlap)
-      .select(col(pn)).collect().map(_.getString(0)).toIndexedSeq
+    // phase 1 — ranges over the winner meta rows (a LOCAL relation),
+    // the batch's global bounds (`bmin_<k>`/`bmax_<k>`; None only past
+    // the caller's partition budget) as typed literals: Catalyst
+    // evaluates the filter on the driver, so this costs no Spark job
+    val ranged = bounds.fold(IndexedSeq.empty[String]) { b =>
+      def bound(name: String): Column = lit(b.getAs[Any](name)).cast(b.schema(name).dataType)
+      val overlap = keys.map { k =>
+        col(s"max_$k") >= bound(s"bmin_$k") && col(s"min_$k") <= bound(s"bmax_$k")
+      }.reduce(_ && _)
+      idx.stats.filter(overlap).select(col(pn)).collect().map(_.getString(0)).toIndexedSeq
+    }
     // record-test ONLY range survivors the batch is not already
     // rewriting: a partition in the batch's own write set is read and
     // rewritten regardless, so testing it buys nothing — and for
     // broad batches (a backfill touching every date) this skips the
     // whole membership pass INCLUDING the batch-hash fetch below
-    val toTest = ranged.filterNot(srcPartVals)
-    if (toTest.isEmpty) return ranged
+    val toTest = ranged.filterNot(srcParts)
+    if (toTest.isEmpty) return (ranged, true)
     // batch key hashes, computed IN-ENGINE with the same expression
     // the record rows were built with, fetched as a bounded parameter
     // set (64-bit hashes, <= 512 KiB)
     val khRows = srcKeys.where(allKeysNotNull(keys))
       .select(khCol(targetSchema, keys).as("kh"))
       .distinct().limit(BatchProbeMax + 1).collect()
-    if (khRows.length > BatchProbeMax) return ranged
+    if (khRows.length > BatchProbeMax) return (ranged, false)
     // no non-null key tuples in the batch means no equi-match is
     // possible — only the batch's own write set can change
-    if (khRows.isEmpty) return ranged.filter(srcPartVals)
+    if (khRows.isEmpty) return (ranged.filter(srcParts), true)
     val hs = khRows.map(_.getLong(0))
     readRecordRows(spark, io, targetPath, Some(hs)) match {
-      case None => ranged
+      case None => (ranged, false)
       case Some(rows) =>
         // phase 2 — exact membership over the path-pruned record rows.
         // Live rows only: (p, ver) must be a current winner — stale
         // rows for keys that since left a partition must not
-        // resurrect it as a candidate
+        // resurrect it as a candidate. Few rows (<= the batch's keys
+        // per chunk), deduplicated here rather than by a shuffle
         val winnerKeys = idx.winnerVers.map { case (p, v) => s"$p\u0000$v" }.toSeq
         val hits = rows
           .filter(col("kh").isInCollection(hs.toIndexedSeq))
           .filter(concat_ws("\u0000", col("p"), col("ver")).isin(winnerKeys: _*))
-          .select(col("p")).distinct().collect().map(_.getString(0)).toSet
-        ranged.filter(srcPartVals) ++ toTest.filter(hits)
+          .select(col("p")).collect().map(_.getString(0)).toSet
+        (ranged.filter(srcParts) ++ toTest.filter(hits), true)
     }
   }
 }

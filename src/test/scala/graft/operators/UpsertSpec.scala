@@ -61,17 +61,32 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("mergePartitionedPath moves a key whose partition value changed (no stale duplicate)") {
-    val path = Files.createTempDirectory("pmerge-move").toString + "/fact"
-    val init = Seq((1, "2024-01-01", "a"), (2, "2024-01-02", "b")).toDF("k", "d", "v")
-    Upsert.mergePartitionedPath(spark, path, init, Seq("k"), "d")
-    // key 1 MOVES from 01-01 to 02-01: the old partition held only this
-    // row, so the merge must DELETE the emptied partition directory
-    val move = Seq((1, "2024-02-01", "A")).toDF("k", "d", "v")
-    assert(Upsert.mergePartitionedPath(spark, path, move, Seq("k"), "d") == 1)
-    val rows = spark.read.parquet(path).select($"k", $"d", $"v")
-      .as[(Int, String, String)].collect().toSet
-    assert(rows == Set((1, "2024-02-01", "A"), (2, "2024-01-02", "b")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "d=2024-01-01")))
+    // twice: answered by the key index, and with the index's record
+    // side deleted, where the semi probe must find the old partition
+    // and the index must come back whole (a record side holding only
+    // the fallback merge's rows would hide key 2 from the next merge)
+    for (dropRec <- Seq(false, true)) {
+      val path = Files.createTempDirectory("pmerge-move").toString + "/fact"
+      val init = Seq((1, "2024-01-01", "a"), (2, "2024-01-02", "b")).toDF("k", "d", "v")
+      Upsert.mergePartitionedPath(spark, path, init, Seq("k"), "d")
+      if (dropRec) {
+        val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+        assert(fs.delete(new org.apache.hadoop.fs.Path(path + "/_keyidx/_rec"), true))
+      }
+      // key 1 MOVES from 01-01 to 02-01: the old partition held only this
+      // row, so the merge must DELETE the emptied partition directory
+      val move = Seq((1, "2024-02-01", "A")).toDF("k", "d", "v")
+      assert(Upsert.mergePartitionedPath(spark, path, move, Seq("k"), "d") == 1)
+      val rows = spark.read.parquet(path).select($"k", $"d", $"v")
+        .as[(Int, String, String)].collect().toSeq
+      assert(rows.sorted == Seq((1, "2024-02-01", "A"), (2, "2024-01-02", "b")), s"dropRec=$dropRec")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "d=2024-01-01")))
+      Upsert.mergePartitionedPath(spark, path,
+        Seq((2, "2024-03-01", "B")).toDF("k", "d", "v"), Seq("k"), "d")
+      assert(spark.read.parquet(path).select($"k", $"d", $"v").as[(Int, String, String)]
+        .collect().sorted.toSeq == Seq((1, "2024-02-01", "A"), (2, "2024-03-01", "B")),
+        s"dropRec=$dropRec")
+    }
   }
 
   // every FileSourceScanExec in an executed plan, through AQE wrappers
@@ -80,6 +95,9 @@ class UpsertSpec extends SparkSpec {
     case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => fileScans(a.executedPlan)
     case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => fileScans(q.plan)
     case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+    // a persisted frame's scans run inside its cached plan
+    case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+      fileScans(m.relation.cachedPlan)
     case other => (other.children ++ other.subqueries).flatMap(fileScans)
   }
 
@@ -191,8 +209,18 @@ class UpsertSpec extends SparkSpec {
     accountedScansWhere(_ == path)(body)
 
   private def accountedScansWhere(pathMatch: String => Boolean)(
-      body: => Unit): Array[(String, Long)] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+      body: => Unit): Array[(String, Long)] =
+    plannedWhile { qe =>
+      fileScans(qe.executedPlan).flatMap(s => s.relation.location.rootPaths
+        .map(rp => rp.toUri.getPath -> s.metrics("numFiles").value))
+        .filter(x => pathMatch(x._1))
+    }(body)
+
+  // run `body` with a listener applying `probe` to every query that
+  // succeeds, return everything `probe` reported
+  private def plannedWhile[T: scala.reflect.ClassTag](
+      probe: org.apache.spark.sql.execution.QueryExecution => Seq[T])(body: => Unit): Array[T] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[T]()
     // listener events arrive late: a query the test ran just before
     // `body` can still be queued when the listener registers — count
     // only queries planned from here on
@@ -200,11 +228,7 @@ class UpsertSpec extends SparkSpec {
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           d: Long): Unit =
-        if (qe.tracker.phases.values.forall(_.startTimeMs >= t0))
-          fileScans(qe.executedPlan).foreach { s =>
-            s.relation.location.rootPaths.foreach(rp =>
-              seen.add(rp.toUri.getPath -> s.metrics("numFiles").value))
-          }
+        if (qe.tracker.phases.values.forall(_.startTimeMs >= t0)) probe(qe).foreach(seen.add)
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
@@ -214,13 +238,13 @@ class UpsertSpec extends SparkSpec {
       // listener events are async — poll until the count is stable
       // for three consecutive 200 ms windows (or 15 s)
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      def targetScans = seen.toArray(Array.empty[(String, Long)]).filter(x => pathMatch(x._1))
+      def reported = { import scala.jdk.CollectionConverters._; seen.asScala.toArray }
       Thread.sleep(1000)
-      var last = targetScans
+      var last = reported
       var stable = 0
       while (stable < 3 && System.nanoTime() < deadline) {
         Thread.sleep(200)
-        val now = targetScans
+        val now = reported
         if (now.length == last.length) stable += 1 else stable = 0
         last = now
       }
@@ -252,6 +276,76 @@ class UpsertSpec extends SparkSpec {
     assert(scans.forall(_._2 <= 1), s"a merge scan read untouched partitions: ${scans.toSeq}")
     val after = spark.read.parquet(path).select($"k", $"v").as[(String, Int)].collect().toMap
     assert(after(batchKey) == -1 && after.size == 200)
+  }
+
+  // a partition-scoped merge keyed on k, partitioned by d, and its read
+  private def scopedMerge(manifest: Boolean, path: String)(df: org.apache.spark.sql.DataFrame): Long =
+    if (manifest) Upsert.mergePartitionedManifest(spark, path, df, Seq("k"), "d")
+    else Upsert.mergePartitionedPath(spark, path, df, Seq("k"), "d")
+  private def scopedRead(manifest: Boolean, path: String): org.apache.spark.sql.DataFrame =
+    if (manifest) Upsert.readManifest(spark, path) else spark.read.parquet(path)
+
+  // does `qe` plan a left-semi join whose left side reads under `root`
+  private def semiOver(root: String)(qe: org.apache.spark.sql.execution.QueryExecution): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    qe.analyzed.exists {
+      case j: Join if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi =>
+        j.left.exists {
+          case r: LogicalRelation => r.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.exists(_.toUri.getPath.startsWith(root))
+            case _ => false
+          }
+          case _ => false
+        }
+      case _ => false
+    }
+  }
+
+  test("a valid key index answers the affected set: the merge plans no semi probe of the target") {
+    for (manifest <- Seq(false, true)) {
+      val path = Files.createTempDirectory("pmerge-nosemi").toString + "/fact"
+      val merge = scopedMerge(manifest, path) _
+      merge(Seq((1, "d1", "a"), (11, "d2", "b"), (21, "d3", "c")).toDF("k", "d", "v"))
+      // an update, a key MOVING out of d3 (which empties) and an insert:
+      // the index alone must name d3 as affected
+      val semis = plannedWhile(qe => Seq(semiOver(path)(qe))) {
+        assert(merge(Seq((11, "d2", "B"), (21, "d4", "C"), (31, "d5", "e"))
+          .toDF("k", "d", "v")) == 3)
+      }
+      assert(semis.nonEmpty, "expected the merge's queries to be seen")
+      assert(!semis.contains(true), s"manifest=$manifest: a semi probe of the target was planned")
+      assert(scopedRead(manifest, path).select($"k", $"d", $"v")
+        .as[(Int, String, String)].collect().sorted.toSeq ==
+        Seq((1, "d1", "a"), (11, "d2", "B"), (21, "d4", "C"), (31, "d5", "e")))
+    }
+  }
+
+  test("a partition a merge emptied is no candidate before the next compaction") {
+    val path = Files.createTempDirectory("pmerge-emptied").toString + "/fact"
+    Upsert.mergePartitionedPath(spark, path,
+      Seq((1, "d1", "a"), (11, "d2", "b")).toDF("k", "d", "v"), Seq("k"), "d")
+    // key 1 moves out and d1 is deleted; its last meta row stays in
+    // the chunks until compaction, and must not be read as a winner
+    Upsert.mergePartitionedPath(spark, path, Seq((1, "d3", "A")).toDF("k", "d", "v"), Seq("k"), "d")
+    val io = graft.sources.SwapFs.forPath(spark, path)
+    val idx = KeyIdx.readValid(spark, io, path, spark.read.parquet(path).schema,
+      io.listDirNames(io.path(path)), "d=", "d", Seq("k")).get
+    assert(idx.winnerVers.keySet == Set("d2", "d3"))
+    assert(idx.stats.select($"p_d").as[String].collect().toSet == Set("d2", "d3"))
+  }
+
+  test("an empty batch into an existing target writes nothing and returns 0") {
+    for (manifest <- Seq(false, true)) {
+      val path = Files.createTempDirectory("pmerge-empty").toString + "/fact"
+      val merge = scopedMerge(manifest, path) _
+      val init = Seq((1, "d1", "a"), (11, "d2", "b")).toDF("k", "d", "v")
+      merge(init)
+      assert(merge(init.limit(0)) == 0, s"manifest=$manifest")
+      assert(scopedRead(manifest, path).select($"k", $"d", $"v")
+        .as[(Int, String, String)].collect().sorted.toSeq ==
+        Seq((1, "d1", "a"), (11, "d2", "b")), s"manifest=$manifest")
+    }
   }
 
   test("the probe bound holds PAST the r14 Bloom saturation cap: 300k-key sha partitions still prune") {
@@ -495,6 +589,30 @@ class UpsertSpec extends SparkSpec {
       Upsert.mergePartitionedManifest(spark, ipath, move, Seq("k"), "d")
     }
     assert(e2.getMessage.contains("in-place"))
+    // three live generation groups, one holding only the null
+    // partition — first as an older group, then as the newest: every
+    // group reads with the date type of the newest group that holds a
+    // date, so no merge or read loses a partition value
+    val gpath = Files.createTempDirectory("mmerge-gens").toString + "/fact"
+    val io = graft.sources.SwapFs.forPath(spark, gpath)
+    def gmerge(rows: (Int, Option[String], String)*): Unit = {
+      Upsert.mergePartitionedManifest(spark, gpath, rows.toDF("k", "d", "v"), Seq("k"), "d")
+      val st = graft.sources.ManifestStore.read(io, gpath).get
+      if (st.gen >= 2) assert(st.parts.values.map(_.takeWhile(_ != '/')).toSet.size == 3)
+    }
+    def read(): Set[(Int, String, String)] = {
+      val got = Upsert.readManifest(spark, gpath)
+      assert(got.schema("d").dataType == org.apache.spark.sql.types.DateType, got.schema)
+      got.select($"k", $"d".cast("string"), $"v").as[(Int, String, String)].collect().toSet
+    }
+    gmerge((1, Some("2024-01-01"), "a"), (2, Some("2024-01-02"), "b"), (4, Some("2024-01-02"), "c"))
+    gmerge((3, None, "n")) // _g1: the null partition only, the newest group
+    gmerge((2, Some("2024-01-02"), "B")) // _g2: key 4 must survive the rewrite
+    assert(read() == Set((1, "2024-01-01", "a"), (2, "2024-01-02", "B"), (4, "2024-01-02", "c"),
+      (3, null, "n")))
+    gmerge((3, None, "N")) // _g3: the null partition only, newest again
+    assert(read() == Set((1, "2024-01-01", "a"), (2, "2024-01-02", "B"), (4, "2024-01-02", "c"),
+      (3, null, "N")))
   }
 
   test("manifest merge keeps the key-index probe bound: untouched partitions never read") {
